@@ -238,13 +238,13 @@ object Bench {
           .write.mode("overwrite").format("noop").save()
         val sec = (System.nanoTime() - t0) / 1e9
         // Query-exit hygiene (r17, VERDICT r16 #1): release the query's
-        // eager localCheckpoint blocks now that its result is fully
-        // materialized. Without this, a 207-query session accumulates
-        // every iterative operator's checkpoint blocks in the storage
-        // pool — the prime suspect for the r16 nocache pass running
-        // 10-200× slower on its SECOND warm run of a dozen keys. Reaping
-        // is outside the timed window: it models the serving layer's
-        // per-request cleanup, not the query's cost.
+        // pins (Tables.pin) now that its result is fully materialized.
+        // Without this, a 207-query session accumulates every iterative
+        // operator's checkpoint blocks in the storage pool — the prime
+        // suspect for the r16 nocache pass running 10-200× slower on its
+        // SECOND warm run of a dozen keys. Reaping is outside the timed
+        // window: it models the serving layer's per-request cleanup, not
+        // the query's cost.
         Engine.reapLocalCheckpoints(spark)
         meter()
         watchdog.foreach(_.cancel(false))

@@ -28,8 +28,11 @@ object ConcurrentBench {
     spark.conf.set("spark.graft.tableCache", "memory")
 
     val names = SparkEntry.queries.keys.toSeq.sorted
+    // each client thread builds and consumes its query, then reaps its own
+    // pins; other clients' in-flight pins are left alone
     def run(n: String): Unit =
-      SparkEntry.queries(n)(spark, sfDir).write.mode("overwrite").format("noop").save()
+      try SparkEntry.queries(n)(spark, sfDir).write.mode("overwrite").format("noop").save()
+      finally Engine.reapLocalCheckpoints(spark)
 
     names.foreach(run) // warm: codegen + table cache materialization
 

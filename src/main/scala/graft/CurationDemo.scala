@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.Tables.PinOps
 
 /** End-to-end training-data curation pipeline — the library's operators
   * composing as a user would chain them (each stage IS the shipped query
@@ -91,7 +92,7 @@ object CurationDemo {
     // compute exactly once — the iterative-pipeline discipline every
     // 100 TB curation run needs (at cluster scale these become persisted
     // stage manifests, which is also what makes the run RESUMABLE).
-    def stage(df: org.apache.spark.sql.DataFrame) = df.localCheckpoint(true)
+    def stage(df: org.apache.spark.sql.DataFrame) = df.pin
 
     val scored = stage(TextQueries.qualityScores(spark, sfDir)
       .filter(col("stop_ratio") >= 0.05 && col("n_tokens") >= 10)

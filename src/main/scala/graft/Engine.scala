@@ -61,45 +61,26 @@ object Engine {
     s
   }
 
-  /** Release every locally-checkpointed RDD still registered with the
-    * context, returning how many were reaped.
+  /** Release the pins ([[Tables.pin]]) the calling thread has made since
+    * its last reap, returning how many were still held.
     *
-    * Why this seam exists (r17, VERDICT r16 #1): iterative operators
-    * (pagerank, k-core, LPA, CC dedup, the stream replays, x166's prefix
-    * sum) pin eager `localCheckpoint` blocks that MUST outlive the
-    * operator function — results are lazy, so the checkpoint's lifetime
-    * has to cover the caller's materialization, which means the operator
-    * itself can never safely unpersist them. Over a long-lived session
-    * running hundreds of queries (the 100 TB serving posture, and exactly
-    * the driver's 207-query bench) the orphaned blocks accumulate in the
-    * storage pool and degrade later queries. The contract: a serving
-    * layer calls this AFTER fully consuming a query's result. Safe
-    * because nothing in the engine caches a checkpointed DataFrame across
-    * queries (model caches hold driver-side arrays; the table cache is
-    * CacheManager-tracked InMemoryRelations, which `isLocallyCheckpointed`
-    * excludes), so any surviving local-checkpoint block is garbage once
-    * the consuming action returns.
+    * The contract: pins belong to the thread that builds a query, and that
+    * thread calls this AFTER it has consumed the query's result — on
+    * success and on failure alike. Results are lazy and pinned blocks have
+    * no lineage, so the operator that pins can never release its own pins;
+    * the caller that consumes the result can. Without a reap, a long-lived
+    * session serving hundreds of queries accumulates every iterative
+    * operator's blocks in the storage pool and slows later queries. Safe
+    * because nothing in the engine keeps a pinned frame across queries:
+    * cross-query caches (the table cache, the IVF index) `persist` through
+    * the CacheManager and are never pins.
     *
-    * Detection is the public `RDD.isCheckpointed` (true once checkpoint
-    * data has materialized — which, post-action, every consumed local
-    * checkpoint has; cache RDDs are persisted-but-never-checkpointed and
-    * stay false). The engine writes no reliable checkpoints (no
-    * `sc.setCheckpointDir` call anywhere), so checkpointed == local. */
+    * Pins made by other threads are left alone, so concurrent clients of
+    * one session can each reap after their own queries. */
   def reapLocalCheckpoints(spark: SparkSession): Int = {
-    val doomed = spark.sparkContext.getPersistentRDDs.values
-      .filter(_.isCheckpointed).toSeq
-    doomed.foreach(_.unpersist(blocking = false))
-    // Frames pinned with Tables.pinCorpus under `spark.graft.pin.storage=
-    // disk` are CacheManager-persisted (lineage kept), not checkpointed —
-    // drain their registry too so the disk posture gets the same per-query
-    // cleanup contract.
-    var reapedPins = 0
-    var pin = Tables.pinnedDisk.poll()
-    while (pin != null) {
-      pin.unpersist(blocking = false)
-      reapedPins += 1
-      pin = Tables.pinnedDisk.poll()
-    }
-    doomed.size + reapedPins
+    val live = spark.sparkContext.getPersistentRDDs
+    val mine = Tables.takePins().flatMap(live.get)
+    mine.foreach(_.unpersist(blocking = false))
+    mine.size
   }
 }

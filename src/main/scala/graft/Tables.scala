@@ -216,45 +216,41 @@ object Tables {
   def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
-  /** Frames pinned via [[pinCorpus]] under `disk` storage, drained by
-    * [[Engine.reapLocalCheckpoints]] (persisted InMemoryRelations are
-    * CacheManager-tracked, not checkpoint-tracked, so the reaper needs its
-    * own registry). */
-  private[graft] val pinnedDisk =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+  /** Ids of the RDDs the current thread has pinned and not yet reaped.
+    * Ids only, no RDD references: a pin that is never reaped stays
+    * collectable, and Spark's ContextCleaner drops its blocks once the
+    * frame is garbage. */
+  private val pins = ThreadLocal.withInitial(() => scala.collection.mutable.ArrayBuffer.empty[Int])
 
-  /** Materialize-once for a CORPUS-SCALE shared frame (rows proportional to
-    * the input corpus — token streams, gram sets, candidate pairs), selected
-    * by the session conf `spark.graft.pin.storage`:
+  /** Materialize-once for a frame a query reads more than once: a
+    * `localCheckpoint` whose blocks carry no lineage, so they must outlive
+    * every action on the query's result. Eager by default: the pin fires
+    * its one materializing job here. `eager = false` leaves that to the
+    * first action that reads it (an iterative loop whose convergence
+    * check is that action).
     *
-    *  - `local` — (default) eager `localCheckpoint(true)`: blocks live on
-    *    executor storage with NO lineage. Right for local mode and for the
-    *    bench; on a real cluster a lost executor kills the query and it is
-    *    documented-unsafe under dynamic allocation — acceptable for
-    *    group/dimension-sized frames, NOT for corpus-sized ones.
-    *  - `disk` — `persist(DISK_ONLY)` + eager materialization: same
-    *    evaluate-once plan shape, but lineage survives, so a lost block is
-    *    recomputed instead of failing the job — the 100 TB cluster posture
-    *    (guide §5: localCheckpoint only "when fault tolerance of that
-    *    intermediate is not critical"). Pinned frames are registered and
-    *    released by `Engine.reapLocalCheckpoints` exactly like checkpoint
-    *    blocks.
-    *
-    * GROUP/DIMENSION-sized shared frames (histograms, per-group reps,
-    * top-k, label frames) keep calling `localCheckpoint(true)` directly —
-    * losing one is cheap to recompute from the front at worst, and the
-    * blocks are KBs–MBs at any scale. */
-  def pinCorpus(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.getOption("spark.graft.pin.storage").contains("disk")) {
-      val p = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      p.foreach(_ => ()) // materialize every column of every partition now
-      pinnedDisk.add(p)
-      p
-    } else df.localCheckpoint(true)
+    * The contract: a pin belongs to the thread that builds the query, and
+    * that thread calls [[Engine.reapLocalCheckpoints]] once it has
+    * consumed the result. Queries on other threads keep their pins, so one
+    * client's reap can never drop blocks another client's lazy result
+    * still reads. This is the only `localCheckpoint` call in the engine;
+    * a direct call would make a pin no reap finds. */
+  def pin(df: DataFrame, eager: Boolean = true): DataFrame = {
+    val p = df.localCheckpoint(eager)
+    // the checkpointed RDD is the LogicalRDD at the root of the returned plan
+    pins.get += p.queryExecution.logical.asInstanceOf[org.apache.spark.sql.execution.LogicalRDD].rdd.id
+    p
+  }
 
-  /** Postfix spelling of [[pinCorpus]] so operator chains read like the
-    * `.localCheckpoint(true)` sites they harden. */
+  /** Hands over, and forgets, the ids the current thread has pinned. */
+  private[graft] def takePins(): Seq[Int] = {
+    val ids = pins.get.toSeq
+    pins.remove()
+    ids
+  }
+
+  /** Postfix spelling of [[pin]] for operator chains. */
   implicit class PinOps(private val df: DataFrame) {
-    def pinCorpus: DataFrame = Tables.pinCorpus(df)
+    def pin: DataFrame = Tables.pin(df)
   }
 }

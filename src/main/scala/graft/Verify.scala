@@ -69,8 +69,8 @@ object Verify {
         } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         } finally
-          // query-exit hygiene (r17): release this query's eager
-          // localCheckpoint blocks — a 207-query session otherwise
+          // query-exit hygiene (r17): release this query's pins
+          // (Tables.pin) — a 207-query session otherwise
           // accumulates them in the storage pool (see Engine scaladoc)
           Engine.reapLocalCheckpoints(spark)
       }

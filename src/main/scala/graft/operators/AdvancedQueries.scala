@@ -210,10 +210,11 @@ object AdvancedQueries {
     * x25/x26. `spread` BEFORE the self-join: the embeddings table is one
     * small scan split, and the within-cluster join output is quadratic in
     * cluster size — without the fan-out the (broadcast-eligible) join runs
-    * every pair on that single split's ONE task (measured: 37 s for x26 at
-    * sf1; ~3 s spread — SemProbe). At 100 TB the scan has real splits and
-    * the join is a co-partitioned exchange, but compute-proportional
-    * fan-out of a compact input is exactly what spread is for. */
+    * every pair on that single split's ONE task (measured: 37.7 s for x26
+    * at sf1 before the fix; BASELINE.md §sf1 scale validation). At 100 TB
+    * the scan has real splits and the join is a co-partitioned exchange,
+    * but compute-proportional fan-out of a compact input is exactly what
+    * spread is for. */
   private def assignedCorpus(s: SparkSession, d: String): DataFrame =
     assignedCorpusWith(s, d, Quantizers.trainedCents(s, d))
 
@@ -332,14 +333,14 @@ object AdvancedQueries {
     * (the round-15 sf10 sweep measured 655 s hot; ~60 s after the cut). */
   val x139: Q = (s, d) => {
     val edges = x26(s, d).select(col("vec_id").as("src"), col("nbr_id").as("dst"))
-      .localCheckpoint(true)
+      .pin
     val nodes = t(s, d, "embeddings").select(col("vec_id").as("id"))
     val outd = edges.groupBy(col("src")).agg(count(lit(1)).as("od"))
     // r19 (guide §2.4): esrc is referenced by every one of the prIters
     // unrolled rounds — lazily each round re-ran the degree agg + join
     // over the checkpointed edges; one more lineage cut materializes it
     // once (E·24-byte rows, same class as the edges checkpoint above).
-    val esrc = edges.join(outd, "src").localCheckpoint(true)
+    val esrc = edges.join(outd, "src").pin
     var pr = nodes.select(col("id"), lit(1000000L).as("pr"))
     for (_ <- 1 to prIters) {
       val contrib = esrc
@@ -381,7 +382,7 @@ object AdvancedQueries {
     val e = x26(s, d).select(
       least(col("vec_id"), col("nbr_id")).as("u"),
       greatest(col("vec_id"), col("nbr_id")).as("v")).distinct()
-      .localCheckpoint(true)
+      .pin
     val deg = e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("degree"))
     val tri = e.select(col("u").as("a"), col("v").as("b"))
@@ -443,11 +444,11 @@ object AdvancedQueries {
     var edges = x26(s, d).select(
       least(col("vec_id"), col("nbr_id")).as("u"),
       greatest(col("vec_id"), col("nbr_id")).as("v")).distinct()
-      .localCheckpoint(true)
+      .pin
     def degrees(e: DataFrame): DataFrame =
       e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("dg"))
-    val d1 = degrees(edges).localCheckpoint(true) // initial degrees; k0 = its node set
+    val d1 = degrees(edges).pin // initial degrees; k0 = its node set
     var keep = d1.select(col("node"))
     var layers: DataFrame = null
     // r19 (optimization, guide §2.4/§1.2): EARLY-EXIT at the fixed point.
@@ -465,7 +466,7 @@ object AdvancedQueries {
     while (!converged && round < coreRounds) {
       round += 1
       val keepNext = degrees(edges).filter(col("dg") >= coreK).select(col("node"))
-        .localCheckpoint(true)
+        .pin
       val peeled = keep.join(keepNext, Seq("node"), "left_anti")
         .select(col("node"), lit(round.toLong).as("layer"))
       converged = peeled.isEmpty
@@ -474,7 +475,7 @@ object AdvancedQueries {
         edges = edges
           .join(keepNext.withColumnRenamed("node", "u"), Seq("u"), "left_semi")
           .join(keepNext.withColumnRenamed("node", "v"), Seq("v"), "left_semi")
-          .localCheckpoint(true)
+          .pin
         keep = keepNext
       }
     }
@@ -528,7 +529,7 @@ object AdvancedQueries {
       greatest(col("vec_id"), col("nbr_id")).as("v")).distinct()
     val nbr = und.select(col("u").as("node"), col("v").as("nb"))
       .unionAll(und.select(col("v").as("node"), col("u").as("nb")))
-      .localCheckpoint(true) // reused every round — cut the kNN lineage once
+      .pin // reused every round — cut the kNN lineage once
     val nodes = t(s, d, "embeddings").select(col("vec_id").as("id"))
     var lab = nodes.select(col("id"), col("id").as("lbl"))
     var relabeled: DataFrame = null
@@ -547,7 +548,7 @@ object AdvancedQueries {
         .join(pick, Seq("id"), "left")
         .select(col("id"), coalesce(col("newl"), col("id")).as("lbl"),
           col("oldl"))
-        .localCheckpoint(true) // referenced twice (next round + readout)
+        .pin // referenced twice (next round + readout)
       relabeled = next.filter(col("lbl") =!= col("oldl"))
         .agg(count(lit(1)).as("n"))
       lab = next.select(col("id"), col("lbl"))
@@ -927,10 +928,11 @@ object AdvancedQueries {
     *
     * Contract: honest FAISS refine semantics, NOT exact-serving like x28.
     * The exact contract is unreachable from a 4-bit-code shortlist on this
-    * corpus — measured (RefineProbe, sf0.001): the worst true-top-3 hit
-    * sits at ADC rank 155 of ~190 probed candidates, so a recall-1.0
-    * shortlist would be the whole probe set and the codes tier would prune
-    * nothing. What refine DOES guarantee: sims on the shortlist are exact
+    * corpus — measured at sf0.001 when x85 landed (round 9; its sf1
+    * serving numbers are in BASELINE.md §sf1 scale validation): the worst
+    * true-top-3 hit sits at ADC rank 155 of ~190 probed candidates, so a
+    * recall-1.0 shortlist would be the whole probe set and the codes tier
+    * would prune nothing. What refine DOES guarantee: sims on the shortlist are exact
     * (score error of pure ADC serving is eliminated), and recall@3 is
     * lifted over ADC-only ranking at the same candidate budget (asserted
     * in the spec). The oracle is its OWN generated twin ([[refineOracle]])
@@ -1001,36 +1003,6 @@ object AdvancedQueries {
       .agg(shortTopK(col("acos"), col("vec_id")).as("short")) // approx-cos desc, tie → low vec_id
       .select(col("q_id"), posexplode(col("short._2")))
       .select(col("q_id"), col("col").as("vec_id"), (col("pos") + 1).cast("long").as("srn"))
-  }
-
-  /** Diagnostic surface (RefineProbe): full ADC ranking (q_id, vec_id,
-    * rank) over the probed candidates, no shortlist cutoff. */
-  private[graft] def refineAdcRanks(s: SparkSession, d: String): DataFrame = {
-    val ix = ivfIndex(s, d)
-    import s.implicits._
-    def ddot(qv: Array[Float], c: Array[Double]): Double =
-      qv.zip(c).foldLeft(0.0) { case (a, (x, y)) => a + x.toDouble * y }
-    val probePairs = ix.queryRows.toSeq.flatMap { case (qid, qe, _) =>
-      val qv = qe.toArray
-      ix.cents.map { case (cid, c) => (cid, ddot(qv, c)) }
-        .sortBy { case (cid, sc) => (-sc, cid) }.take(nprobe)
-        .map { case (cid, _) => (qid, cid) }
-    }
-    val lutByQ = ix.queryRows.map { case (qid, qe, _) =>
-      qid -> VectorQueries.pqDotLut(qe.toArray, ix.cbs).flatten.toSeq
-    }.toMap
-    val probes = probePairs.map { case (qid, cid) => (qid, cid, lutByQ(qid)) }
-      .toDF("q_id", "cid", "lut")
-    val codes = ix.codesServing
-    val adot = (0 until VectorQueries.pqM)
-      .map(i => element_at(col("lut"), (lit(i * VectorQueries.pqK) + col(s"c$i") + 1).cast("int")))
-      .reduce(_ + _)
-    codes.join(broadcast(probes), Seq("cid"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), (adot / col("nrm")).as("acos"), col("vec_id"))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("q_id")).orderBy(desc("acos"), col("vec_id"))).cast("long"))
-      .select(col("q_id"), col("vec_id"), col("rank"))
   }
 
   val x85: Q = (s, d) => {
@@ -1167,7 +1139,7 @@ object AdvancedQueries {
       .select(col("vec_id"), col("cid"),
         floor(d2 * lit(1e6) + lit(0.5))
           .cast("long").as("d2f"))
-      .pinCorpus
+      .pin
     val stats = dists.groupBy(col("cid"))
       .agg(count(lit(1)).as("n"), sum(col("d2f")).as("sf"))
     dists.join(broadcast(stats), Seq("cid")) // nlist rows — always broadcast
@@ -1268,7 +1240,7 @@ object AdvancedQueries {
     val tops = melted.groupBy(col("m"), col("q_id"))
       .agg(topk(col("sim"), col("vec_id")).as("top"))
       .select(col("m"), col("q_id"), explode(col("top._2")).as("vec_id"))
-      .localCheckpoint(true)
+      .pin
     val truth = tops.filter(col("m") === 64L).select(col("q_id"), col("vec_id"))
     val hits = tops.filter(col("m") =!= 64L)
       .join(truth, Seq("q_id", "vec_id"))

@@ -51,7 +51,7 @@ object CurationQueries {
     // is the shape that AVOIDS this materialization at 100 TB; x45 is the
     // exact-report twin whose hits join already moves the train stream.)
     val train = grams(docs.filter(col("split") === "train"), "t_id")
-      .pinCorpus
+      .pin
     val ev = grams(docs.filter(col("split") === "test"), "e_id")
     val perDoc = train.groupBy(col("t_id")).agg(count(lit(1)).as("n_grams"))
     // two COUNT(DISTINCT) → one Expand(×2) agg: fine — the input here is
@@ -117,7 +117,7 @@ object CurationQueries {
     // benchmark-sized by contract — the train-side gram stream stays lazy
     // (recompute beats materializing a corpus-scale stream at 100 TB).
     val ev = grams(docs.filter(col("split") === "test"), "e_id")
-      .localCheckpoint(true)
+      .pin
     val bloom = graft.functions.BloomExpr.toBytes(
       ev.stat.bloomFilter("g", 1L << 20, bloomBits))
     val cand = train.filter(

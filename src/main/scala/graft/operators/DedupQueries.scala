@@ -138,11 +138,11 @@ object DedupQueries {
       // withinPairs (4 refs); reps feeds the banding + both verify sides
       // (3 refs) — each lazy eval re-ran tokenize+shingle (+MinHash for
       // reps). One materialization apiece, same pattern as x135.
-      .pinCorpus
+      .pin
     val reps = groups
       .select(col("rep"), col("sh"),
         graft.functions.VectorExprs.minHashSigs(col("sh"), 32).as("sigs"))
-      .pinCorpus
+      .pin
     val banded = reps
       .select(col("rep"), explode(bandsFromSigs(col("sigs"), 8, 4)).as("b"))
       .select(col("rep"), col("b.band_id"), col("b.band_hash"))
@@ -197,7 +197,7 @@ object DedupQueries {
       .withColumn("rep", col("ids").getItem(0))
       // referenced by the blocking + both expansion joins + withinPairs —
       // materialized once (r19, guide §2.4)
-      .pinCorpus
+      .pin
     val blocked = groups.select(col("rep"), col("sim"),
       explode(array((0 until 4).map(k =>
         struct(lit(k).as("blk"), shiftright(col("sim"), k * 16).bitwiseAND(0xFFFFL).as("key"))): _*)).as("b"))
@@ -268,11 +268,11 @@ object DedupQueries {
       .select(col("doc_id"), explode(array_distinct(shingles3(col("toks")))).as("gram"))
       .select(col("doc_id"), graft.Tables.h60(col("gram")).as("gh"))
       .distinct()
-      .pinCorpus
+      .pin
     val dfc = g0.groupBy(col("gh")).agg(count(lit(1)).as("df"))
     val g = g0.join(dfc.filter(col("df") <= contDfCap), Seq("gh"))
       .select(col("doc_id"), col("gh"))
-      .pinCorpus
+      .pin
     val n = g.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
     g.select(col("doc_id").as("a_id"), col("gh"))
       .join(g.select(col("doc_id").as("b_id"), col("gh")), Seq("gh"))
@@ -351,15 +351,14 @@ object DedupQueries {
       }
       return members.map(v => (v, minLabel(find(v)))).toSeq.toDF("id", "label")
     }
-    val bidir = edges.select(col("a").as("u"), col("b").as("v"))
-      .union(edges.select(col("b").as("u"), col("a").as("v")))
-      .localCheckpoint()
+    val bidir = graft.Tables.pin(edges.select(col("a").as("u"), col("b").as("v"))
+      .union(edges.select(col("b").as("u"), col("a").as("v"))), eager = false)
     // Singletons never change label and never influence one — keep them out
     // of the loop entirely (at 100 TB most of a deduped corpus is singleton).
     // x44 re-joins members at the end, so dropping them here is lossless.
-    var lab = nodes.join(
+    var lab = graft.Tables.pin(nodes.join(
         bidir.select(col("u").as("id")).distinct(), Seq("id"), "left_semi")
-      .select(col("id"), col("id").as("label")).localCheckpoint()
+      .select(col("id"), col("id").as("label")), eager = false)
     // Labels are node ids and only ever DECREASE (min-propagation + path
     // halving), so Σlabel is strictly monotone until the fixed point: the
     // convergence test is one scan of the just-checkpointed round, not a
@@ -372,10 +371,9 @@ object DedupQueries {
         .groupBy(col("u")).agg(min(col("label")).as("nl"))
       val prop = lab.join(nbrMin.withColumnRenamed("u", "id"), Seq("id"), "left")
         .select(col("id"), least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
-      val half = prop.join(
+      val half = graft.Tables.pin(prop.join(
         prop.select(col("id").as("label"), col("label").as("hop")), Seq("label"))
-        .select(col("id"), col("hop").as("label"))
-        .localCheckpoint()
+        .select(col("id"), col("hop").as("label")), eager = false)
       val s = half.agg(sum(col("label"))).head.getLong(0)
       converged = prevSum.contains(s)
       prevSum = Some(s)
@@ -414,7 +412,7 @@ object DedupQueries {
     val docs = t(s, d, "documents")
       .select(col("doc_id"), col("n_chars"), md5(col("text")).as("h"),
         array_distinct(split(col("text"), " ")).as("tk"))
-      .pinCorpus
+      .pin
     val roots = docs.groupBy(col("h")).agg(min(col("doc_id")).as("root"))
     val e1 = docs.join(roots, "h").filter(col("doc_id") =!= col("root"))
       .select(col("root").as("a"), col("doc_id").as("b"))
@@ -521,7 +519,7 @@ object DedupQueries {
         graft.functions.VectorExprs.h60Array(shinglesN(col("toks"), spanW)))).as("w"))
       // materialized ONCE (r19, guide §2.4): the dup-hash agg and the
       // join back each re-ran the md5-per-window chain
-      .pinCorpus
+      .pin
     val dup = wins.groupBy(col("w"))
       .agg(countDistinct(col("doc_id")).as("ndocs"))
       .filter(col("ndocs") >= 2)
@@ -559,7 +557,7 @@ object DedupQueries {
       .select(col("doc_id"), (col("pos") + 1).as("start"), col("col").as("wh"))
       // materialized ONCE (r19, guide §2.4): the dup-set chain and the
       // starts join each re-ran the md5-per-window chain
-      .pinCorpus
+      .pin
     val dup = wins.select(col("doc_id"), col("wh")).distinct()
       .groupBy(col("wh")).agg(countDistinct(col("doc_id")).as("ndocs"))
       .filter(col("ndocs") >= 2)
@@ -657,7 +655,7 @@ object DedupQueries {
       .distinct() // h60-collision safety: both engines set-ify the hashes
       // materialized ONCE (r19, guide §2.4): feeds the df agg + the
       // ordered-set build — each lazily re-ran tokenize+md5 per gram
-      .pinCorpus
+      .pin
     val df = g.groupBy(col("gh")).agg(count(lit(1)).as("df"))
     val ordered = g.join(df, Seq("gh"))
       .groupBy(col("doc_id"))
@@ -670,7 +668,7 @@ object DedupQueries {
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
       .withColumn("rep", col("ids").getItem(0))
       // referenced 3× (reps build + both expansion joins) — one cut (r19)
-      .pinCorpus
+      .pin
     val reps = groups.select(col("rep"), col("hs"), col("m"))
     val pref = reps.select(col("rep"),
         expr(s"slice(hs, 1, cast(m - (($ppNum * m + $ppNum) div $ppDen) + 1 as int))").as("p"))

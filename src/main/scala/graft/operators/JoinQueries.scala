@@ -110,7 +110,7 @@ object JoinQueries {
         array_union(variants, array(col("name")))))).as("sig"))
       // deletion-neighborhood signature frame (len+1 md5 hashes per name)
       // materialized once for both self-join sides (r19, guide §2.4)
-      .pinCorpus
+      .pin
     val a = sigs.select(col("name").as("a_name"), col("sig"))
     val b = sigs.select(col("name").as("b_name"), col("sig"))
     // r20 (guide §2.3/§2.5 + skew audit): sig-bucket sizes at sf0.1 are
@@ -334,7 +334,7 @@ object JoinQueries {
     // node id of a name = its min custkey (unique per name, and the
     // min-label CC then emits the global min custkey as the cluster label)
     val nameIds = cust.groupBy(col("name")).agg(min(col("id")).as("nid"))
-      .localCheckpoint(true) // r20 probe: 3 consumers (node set, edge join x2, mem)
+      .pin // r20 probe: 3 consumers (node set, edge join x2, mem)
     val edges = fuzzyNamePairs(s, d)
       .join(nameIds.select(col("name").as("a_name"), col("nid").as("a")), "a_name")
       .join(nameIds.select(col("name").as("b_name"), col("nid").as("b")), "b_name")

@@ -65,7 +65,7 @@ object LmQueries {
       // materialized ONCE (r19, guide §2.4): the bigram frame (2 md5
       // hashes per gram) feeds the two ref count aggs, the vocab agg AND
       // the scoring join — 4 lazy evals of the tokenize+hash chain.
-      .pinCorpus
+      .pin
     val ref = grams.filter(SamplingQueries.bucket(col("doc_id")) < refBuckets)
     val c2 = ref.groupBy(col("gh")).agg(count(lit(1)).as("c2"))
     val c1 = ref.groupBy(col("w1h")).agg(count(lit(1)).as("c1"))

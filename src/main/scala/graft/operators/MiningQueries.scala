@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables.{t, fround}
+import graft.Tables.PinOps
 
 /** Pattern-mining operators (SURVEY §2.2 E148–E149): market-basket
   * association rules and CUSUM change-point detection — the "what co-occurs"
@@ -241,9 +242,8 @@ object MiningQueries {
   val x166: Q = (s, d) => {
     // r20 (guide §2.4): rev is consumed by BOTH the totals agg and the
     // range repartition — lazily each re-ran the full lineitem scan + agg.
-    // Part-keyed, so it scales with the part dimension (not lineitem), but
-    // at 100 TB that is still data-scale → pinCorpus.
-    val rev = graft.Tables.pinCorpus(t(s, d, "lineitem")
+    // Pinned once; part-keyed, so it scales with the part dimension.
+    val rev = graft.Tables.pin(t(s, d, "lineitem")
       .select(col("l_partkey"),
         expr("CAST(ROUND(l_extendedprice * (1.0 - l_discount) * 10000.0) AS BIGINT)").as("r"))
       .groupBy(col("l_partkey")).agg(sum(col("r")).as("rev")))
@@ -266,7 +266,7 @@ object MiningQueries {
     // boundaries and the offset join silently corrupts the prefix sum.
     val local = ranged.withColumn("lcum",
       sum(col("rev").cast("decimal(38,0)")).over(wLocal))
-      .localCheckpoint(true)
+      .pin
     // phase 2: exclusive prefix of the per-range totals (≤ shuffle-
     // partition-count rows — THIS window is the bounded one), broadcast
     // back; global cum = range offset + local cum

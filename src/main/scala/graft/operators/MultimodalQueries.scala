@@ -240,7 +240,7 @@ object MultimodalQueries {
       // referenced by the variant expansion + both id-expansion joins +
       // withinPairs — materialized once (r19, guide §2.4); the dHash cell
       // agg (per-token posexplode + G conditional sums) ran per reference
-      .pinCorpus
+      .pin
     val reps = groups.select(col("rep"), col("ph"))
     val variants = reps.select(col("rep").as("ra"), col("ph").as("pa"),
       explode(typedLit(phMasks)).as("m"))

@@ -33,7 +33,7 @@ object NoveltyQueries {
       // materialized ONCE (r19, guide §2.4): both novelty keys reference
       // the frame twice (total agg + first-owner chain) — the lazy
       // spelling re-ran tokenize+md5 per reference
-      .pinCorpus
+      .pin
 
   /** x65 — source novelty curve (E63): scan sources in name order; each
     * distinct corpus 3-gram is credited to its FIRST source, giving per

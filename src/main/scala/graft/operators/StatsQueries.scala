@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables.{t, davg, fround}
+import graft.Tables.PinOps
 
 /** Table-statistics / data-quality operators (SURVEY §2.2 E94–E96):
   * ANALYZE-style column stats, equi-width histograms, and a referential-
@@ -210,7 +211,7 @@ object StatsQueries {
     // An eager localCheckpoint of ONE row makes single-scan true by
     // construction — the melt branches read a local 1-row RDD, and the
     // final plan contains no parquet scan at all (asserted in StatsSpec).
-    val one = li.agg(aggs.head, aggs.tail: _*).localCheckpoint(true)
+    val one = li.agg(aggs.head, aggs.tail: _*).pin
     val nd = col("n").cast("double")
     def sd(c: String) = col(s"s_$c").cast("double") / lit(100.0)
     // Σxy exceeds 2^53 (and 2^63) at scale: render the exact integer as
@@ -340,7 +341,7 @@ object StatsQueries {
       // grouping passes behind it run once (r19, guide §2.4)
       val cf = li.groupBy(col(k)).agg(count(lit(1)).as("cnt"))
         .groupBy(col("cnt")).agg(count(lit(1)).as("freq"))
-        .localCheckpoint(true)
+        .pin
       val tot = cf.agg(sum(col("freq")).as("n_keys"),
         sum(col("cnt") * col("freq")).as("n_rows"), max(col("cnt")).as("max_cnt"))
       val w = Window.orderBy(col("cnt")).rowsBetween(Window.unboundedPreceding, -1)

@@ -69,17 +69,17 @@ object StreamReplayQueries {
       .groupBy(sort_array(col("sh")).as("sh"))
       .agg(sort_array(collect_list(struct(col("doc_id"), col("bat")))).as("mems"))
       .withColumn("rep", col("mems").getItem(0).getField("doc_id"))
-      .pinCorpus
+      .pin
     val mem = groups.select(col("rep"), explode(col("mems")).as("m"))
       .select(col("rep"), col("m.doc_id").as("id"), col("m.bat").as("bat"))
     val reps = groups
       .select(col("rep"), col("sh"),
         graft.functions.VectorExprs.minHashSigs(col("sh"), 32).as("sigs"))
-      .pinCorpus
+      .pin
     val bands = reps
       .select(col("rep"), explode(DedupQueries.bandsFromSigs(col("sigs"), 8, 4)).as("b"))
       .select(col("rep"), col("b.band_id"), col("b.band_hash"))
-      .pinCorpus
+      .pin
     // unordered cross-set candidate rep pairs sharing ≥1 band (identical
     // sets share ALL bands, so doc-level candidacy survives rep-level)
     val cand = bands.select(col("rep").as("ra"), col("band_id"), col("band_hash"))
@@ -134,7 +134,7 @@ object StreamReplayQueries {
       .select(pmod(col("doc_id"), lit(nReplayBatches)).as("bat"),
         explode(split(col("text"), " ")).as("tok"))
       .select(col("bat"), col("tok"), xxhash64(col("tok")).as("gh"))
-      .pinCorpus
+      .pin
     val perTrigger = (0 until nReplayBatches).map { b =>
       val toks = toksAll.filter(col("bat") <= b).select(col("tok"), col("gh"))
       val head = toks.agg(UdfQueries.mgUdaf(col("gh")).as("cands"),

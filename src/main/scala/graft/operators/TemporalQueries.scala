@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables.{t, dsum, tsStr, davg, fround}
+import graft.Tables.PinOps
 
 /** SURVEY.md §2.4 Q31–Q32 + E6 (as-of join) + E25 (session window), batch
   * forms. The same window()/session_window() expressions run unchanged under
@@ -74,10 +75,10 @@ object TemporalQueries {
 
   /** x35 — q34's batch fast path: repartition by user, sort within
     * partitions, one linear typed pass per partition. Value-identical to
-    * q34 (same oracle) and measured −30% (SessionProbe, BASELINE.md §q34):
-    * the hand-rolled merge adds ~zero CPU on top of the exchange+sort
-    * floor, where `session_window`'s generic merge machinery adds
-    * ~0.15 s. mapPartitions is deliberate here — sessionization is a
+    * q34 (same oracle) and measured −30% (BASELINE.md §q34 session-window
+    * attribution): the hand-rolled merge adds ~zero CPU on top of the
+    * exchange+sort floor, where `session_window`'s generic merge machinery
+    * adds ~0.15 s. mapPartitions is deliberate here — sessionization is a
     * per-key linear scan, exactly the "genuine per-partition imperative
     * logic" case; the streaming-unified `session_window` form (q34)
     * remains the default. */
@@ -171,7 +172,7 @@ object TemporalQueries {
     val r = t(s, d, "events")
       .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
       .withColumn("rn", row_number().over(w))
-      .localCheckpoint(true)
+      .pin
     val stages = funnelSteps.zipWithIndex.scanLeft(Option.empty[DataFrame]) {
       case (prev, (step, _)) =>
         val mine = r.filter(col("event_type") === step)
@@ -180,7 +181,7 @@ object TemporalQueries {
           case Some(p) => mine.join(p, "user_id").filter(col("rn") > col("r"))
         }
         Some(gated.groupBy(col("user_id")).agg(min(col("rn")).as("r"))
-          .localCheckpoint(true))
+          .pin)
     }.flatten
     stages.zipWithIndex.map { case (df, i) =>
       df.agg(count(lit(1)).as("users"))
@@ -377,7 +378,7 @@ object TemporalQueries {
       // query-row action + the sweep) and x125's self-join twice with
       // different aliases (no exchange reuse) — each lazy eval re-ran the
       // hourly agg + the collect_list window. Bounded: types × grid hours.
-      .localCheckpoint(true)
+      .pin
   }
 
   val x123: Q = (s, d) => {
@@ -535,7 +536,7 @@ object TemporalQueries {
     val r = t(s, d, "events")
       .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
       .withColumn("rn", row_number().over(w))
-      .localCheckpoint(true)
+      .pin
     funnelSteps.zipWithIndex.scanLeft(Option.empty[DataFrame]) {
       case (prev, (step, _)) =>
         val mine = r.filter(col("event_type") === step)
@@ -547,7 +548,7 @@ object TemporalQueries {
         }
         Some(gated.groupBy(col("user_id"))
           .agg(min(col("rn")).as("r"), min_by(col("ts"), col("rn")).as("t"))
-          .localCheckpoint(true))
+          .pin)
     }.flatten
   }
 

@@ -379,7 +379,7 @@ object TextQueries {
       .distinct()
       // materialized ONCE (r19, guide §2.4): per-source totals + both
       // self-join sides re-ran tokenize+md5 per reference
-      .pinCorpus
+      .pin
     val n = g.groupBy(col("source")).agg(count(lit(1)).as("n_grams"))
     val common = g.select(col("source").as("a_src"), col("gh"))
       .join(g.select(col("source").as("b_src"), col("gh")), Seq("gh"))
@@ -506,7 +506,7 @@ object TextQueries {
     // whole gate stage at sf100.)
     val docsK = docs
       .select(col("doc_id"), graft.streaming.StreamOps.canonKey(col("text")).as("canon_h"))
-      .pinCorpus
+      .pin
     val repIds = docsK.groupBy(col("canon_h")).agg(min(col("doc_id")).as("doc_id"))
     // no broadcast hint: repIds is one row per DISTINCT canonical text —
     // small under a duplicate flood, corpus-sized on a dup-free corpus.
@@ -553,7 +553,7 @@ object TextQueries {
       .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
       // materialized ONCE (r19, guide §2.4): feeds the df agg AND the
       // scoring join — each lazily re-ran tokenize + the per-doc count
-      .pinCorpus
+      .pin
     val df = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val nd = docs.agg(count(lit(1)).as("nd"))
     val w = Window.partitionBy(col("doc_id")).orderBy(desc("w_raw"), col("tok"))
@@ -617,7 +617,7 @@ object TextQueries {
     val matched = toks.join(
         broadcast(top.select(col("w1"), col("w2"), col("w3"), col("phrase"))),
         col("tok") === col("w1") || col("tok") === col("w2") || col("tok") === col("w3"))
-      .pinCorpus
+      .pin
     val first = matched.filter(col("tok") === col("w1"))
       .select(col("doc_id"), col("pos").as("p"), col("phrase"))
     def postings(w: String, shift: Int) =
@@ -734,7 +734,7 @@ object TextQueries {
     // per reference. kept is ≤collocCap rows per doc by construction.
     val toks = docs.select(col("doc_id"),
       explode(array_distinct(split(col("text"), " "))).as("tok"))
-      .pinCorpus
+      .pin
     val df = toks.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val nd = docs.agg(count(lit(1)).as("nd"))
     val cand = df.filter(col("df") >= collocMinDf).select(col("tok"), col("df"))
@@ -743,7 +743,7 @@ object TextQueries {
         Window.partitionBy(col("doc_id")).orderBy(col("df"), col("tok"))))
       .filter(col("r") <= collocCap)
       .select(col("doc_id"), col("tok"), col("df"))
-      .pinCorpus
+      .pin
     val pairs = kept.select(col("doc_id"), col("tok").as("ta"), col("df").as("dfa"))
       .join(kept.select(col("doc_id"), col("tok").as("tb"), col("df").as("dfb")),
         Seq("doc_id"))
@@ -788,7 +788,7 @@ object TextQueries {
       .groupBy(col("token"), col("lang")).agg(count(lit(1)).as("a"))
       // vocab×|langs| grid referenced by the token totals AND the cell
       // join — materialized once (r19, guide §2.4)
-      .pinCorpus
+      .pin
     val tokTot = tl.groupBy(col("token")).agg(sum(col("a")).as("n_t"))
     val langTot = docs.groupBy(col("lang")).agg(count(lit(1)).as("n_l"))
     val nTot = docs.agg(count(lit(1)).as("n")) // 1-row scalar broadcast
@@ -896,7 +896,7 @@ object TextQueries {
     // agg and both marginal aggs each re-ran the full langGuess doc scan.
     val conf = langGuess(s, d)
       .groupBy(col("label"), col("guess")).agg(count(lit(1)).as("n"))
-      .localCheckpoint(true)
+      .pin
     val tot = conf.agg(sum(col("n")).as("nn"),
       sum(when(col("label") === col("guess"), col("n")).otherwise(0L)).as("diag"))
     val marg = conf.groupBy(col("label")).agg(sum(col("n")).as("r"))
@@ -1038,7 +1038,7 @@ object TextQueries {
     // the per-source count join each re-ran the tokenize explode
     val tok = t(s, d, "documents")
       .select(col("source"), explode(split(col("text"), " ")).as("token"))
-      .pinCorpus
+      .pin
     val top = tok.groupBy(col("token")).agg(count(lit(1)).as("n"))
       .orderBy(desc("n"), col("token")).limit(jsTopV).select(col("token"))
     val st = tok.join(broadcast(top), Seq("token"))
@@ -1053,7 +1053,7 @@ object TextQueries {
       .join(st, Seq("source", "token"), "left")
       .select(col("source"), col("token"), coalesce(col("c"), lit(0L)).as("c"))
       // top-V × |S| rows, referenced 3× (totals + both pair sides) (r19)
-      .localCheckpoint(true)
+      .pin
     val totals = dense.groupBy(col("source")).agg(sum(col("c")).as("tot"))
     val a = dense.select(col("source").as("sa"), col("token"), col("c").as("ca"))
       .join(broadcast(totals.select(col("source").as("sa"), col("tot").as("ta"))), Seq("sa"))

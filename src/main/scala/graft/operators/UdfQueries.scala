@@ -463,7 +463,7 @@ object UdfQueries {
       .select(col("lang"), split(col("text"), " ").as("toks"))
       .select(col("lang"),
         explode(array_distinct(DedupQueries.shingles3(col("toks")))).as("g"))
-      .pinCorpus
+      .pin
     val h = graft.Tables.h60(col("g"))
     def smear(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       Seq(1, 2, 4, 8, 16, 32).foldLeft(c)((a, k) => a.bitwiseOR(shiftright(a, k)))
@@ -514,14 +514,14 @@ object UdfQueries {
       .select(col("source"),
         explode(array_distinct(DedupQueries.shingles3(col("toks")))).as("g"))
       .distinct()
-      .pinCorpus
+      .pin
     val h = graft.Tables.h60(col("g"))
     def smear(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       Seq(1, 2, 4, 8, 16, 32).foldLeft(c)((a, k) => a.bitwiseOR(shiftright(a, k)))
     val rho = lit(51) - bit_count(smear(h.bitwiseAND(lit((1L << 50) - 1))))
     val regs = sh.select(col("source"), shiftright(h, 50).as("bucket"), rho.as("rho"))
       .groupBy(col("source"), col("bucket")).agg(max(col("rho")).as("reg"))
-      .localCheckpoint(true)
+      .pin
     val sumterm = sum(expr("shiftleft(cast(1 as bigint), 52 - reg)")) +
       (lit(hllM.toLong) - count(lit(1))) * lit(1L << 52)
     val singles = regs.groupBy(col("source")).agg(sumterm.as("st"))
@@ -587,7 +587,7 @@ object UdfQueries {
       // materialized ONCE (r19, guide §2.4): the grid estimate and the
       // exact inner product are two consumers — lazy lineage re-ran the
       // scan+tokenize per consumer, undoing the r16 one-shared-pass fix.
-      .pinCorpus
+      .pin
     def sideN(a: Boolean, as: String) =
       sum(when(if (a) col("isA") else !col("isA"), 1L).otherwise(0L)).as(as)
     val est = toks

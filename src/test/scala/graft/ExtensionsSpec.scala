@@ -5,6 +5,13 @@ import org.apache.spark.sql.SparkSessionExtensions
 /** The custom expressions exposed at the SQL surface (E29 extension seam). */
 class ExtensionsSpec extends SparkSpec {
 
+  /** Registers the builders GraftExtensions injects on the shared session
+    * (built without the extension). */
+  private def registerGraftFunctions(): Unit =
+    GraftExtensions.functions.foreach { case (id, _, builder) =>
+      spark.sessionState.functionRegistry.createOrReplaceTempFunction(id.funcName, builder, "built-in")
+    }
+
   test("GraftExtensions applies cleanly to a fresh SparkSessionExtensions") {
     new GraftExtensions().apply(new SparkSessionExtensions) // must not throw
   }
@@ -51,36 +58,8 @@ class ExtensionsSpec extends SparkSpec {
     assert(got.map(_.toSeq).toSeq == want.map(_.toSeq).toSeq)
   }
 
-  test("pinCorpus disk mode: same rows, lineage kept, reaped by Engine") {
-    import org.apache.spark.sql.functions._
-    val base = spark.range(1000).select(col("id"), (col("id") % 7).as("k"))
-    val expected = base.groupBy(col("k")).count().collect().sortBy(_.getLong(0))
-    spark.conf.set("spark.graft.pin.storage", "disk")
-    try {
-      val pinned = Tables.pinCorpus(base)
-      assert(pinned.storageLevel.useDisk && !pinned.storageLevel.useMemory)
-      assert(!pinned.rdd.isCheckpointed) // lineage survives (fault tolerance)
-      val got = pinned.groupBy(col("k")).count().collect().sortBy(_.getLong(0))
-      assert(got.toSeq == expected.toSeq)
-      assert(Engine.reapLocalCheckpoints(spark) >= 1) // registry drained
-      assert(pinned.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-    } finally spark.conf.unset("spark.graft.pin.storage")
-  }
-
   test("float_dot / simhash64 / minhash_sigs callable from spark.sql") {
-    // same builders GraftExtensions injects, registered on the shared session
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("float_dot",
-      es => graft.functions.FloatDot(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("simhash64",
-      es => graft.functions.SimHash64(es(0)), "built-in")
-    reg.createOrReplaceTempFunction("minhash_sigs", es => {
-      val n = es(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v, _) => v.toString.toInt
-        case other => throw new IllegalArgumentException(s"numHashes must be literal: $other")
-      }
-      graft.functions.MinHashSigs(es(0), n)
-    }, "built-in")
+    registerGraftFunctions()
     val dot = spark.sql(
       "SELECT float_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d")
       .head().getDouble(0)
@@ -98,11 +77,7 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("h60 / h60_array callable from spark.sql, match the documented formulation") {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("h60",
-      es => graft.functions.H60(es(0)), "built-in")
-    reg.createOrReplaceTempFunction("h60_array",
-      es => graft.functions.H60Array(es(0)), "built-in")
+    registerGraftFunctions()
     val r = spark.sql(
       """SELECT h60('hello') AS a,
         |  CAST(conv(substring(md5(CAST('hello' AS BINARY)), 1, 15), 16, 10) AS BIGINT) AS b,
@@ -120,8 +95,8 @@ class ExtensionsSpec extends SparkSpec {
     // a cached table (CacheManager InMemoryRelation) — must SURVIVE reaping
     val cached = Seq(1, 2, 3).toDF("v").persist()
     cached.count()
-    // an eager local checkpoint — the leak class the reaper targets
-    val ck = Seq(4, 5, 6).toDF("v").localCheckpoint(true)
+    // an eager pin — the leak class the reaper targets
+    val ck = Tables.pin(Seq(4, 5, 6).toDF("v"))
     assert(ck.count() == 3)
     val added = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
     assert(added.values.exists(_.isCheckpointed), "checkpoint RDD registered")
@@ -132,5 +107,94 @@ class ExtensionsSpec extends SparkSpec {
     assert(after.values.exists(!_.isCheckpointed), "cache RDD survives")
     assert(cached.count() == 3) // cached table still serves
     cached.unpersist()
+  }
+
+  test("literal arguments: integral literals only, anything else is named and rejected") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+    val builder = GraftExtensions.functions.map { case (id, _, b) => id.funcName -> b }.toMap
+    val arr = Literal.create(Seq("a b c", "b c d"), org.apache.spark.sql.types.ArrayType(
+      org.apache.spark.sql.types.StringType))
+    val bad = Seq[(String, Expression)](
+      "NULL" -> Literal(null, org.apache.spark.sql.types.IntegerType),
+      "8.5" -> Literal(BigDecimal("8.5")),
+      "'8x'" -> Literal("8x"),
+      "'8'" -> Literal("8"),
+      "8.0D" -> Literal(8.0),
+      "3000000000L" -> Literal(3000000000L))
+    for ((shown, e) <- bad) {
+      val m = intercept[IllegalArgumentException](builder("minhash_sigs")(Seq(arr, e))).getMessage
+      assert(m.startsWith("minhash_sigs: numHashes") && m.contains(shown), m)
+      val p = intercept[IllegalArgumentException](
+        builder("float_prefix_dots")(Seq(arr, arr, Literal(2), e))).getMessage
+      assert(p.startsWith("float_prefix_dots: each bound") && p.contains(shown), p)
+    }
+    // integral literals of every width are accepted
+    for (n <- Seq[Expression](Literal(4), Literal(4L), Literal(4.toShort), Literal(4.toByte)))
+      assert(builder("minhash_sigs")(Seq(arr, n)) == graft.functions.MinHashSigs(arr, 4))
+    // and the rejection surfaces through spark.sql with the function's name
+    registerGraftFunctions()
+    val e = intercept[Exception](spark.sql("SELECT minhash_sigs(array('a'), NULL)").collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.isInstanceOf[IllegalArgumentException] && t.getMessage.contains("minhash_sigs")), e)
+  }
+
+  /** Ids of the context's checkpointed RDDs that are not in `before`. */
+  private def newCheckpointed(before: Set[Int]): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.collect {
+      case (id, r) if !before(id) && r.isCheckpointed => id
+    }.toSet
+
+  test("a reap on one thread leaves another thread's unconsumed pins intact") {
+    import java.util.concurrent.{Callable, Executors}
+    val q = SparkEntry.queries("x142_corr_matrix") // pins one eager aggregate
+    val want = q(spark, sfDir).collect().map(_.toString).sorted.toSeq
+    Engine.reapLocalCheckpoints(spark)
+    val clientB = Executors.newSingleThreadExecutor()
+    def onB[T](body: => T): T = clientB.submit(new Callable[T] { def call(): T = body }).get()
+    try {
+      // B builds its query (the pin materializes now) but does not consume yet
+      val built = onB(q(spark, sfDir))
+      // A finishes its own query and reaps on its own thread
+      val a = new Thread(() => { Engine.reapLocalCheckpoints(spark); () })
+      a.start(); a.join()
+      // B's lazy result still reads its pinned blocks
+      assert(onB(built.collect().map(_.toString).sorted.toSeq) == want)
+      assert(onB(Engine.reapLocalCheckpoints(spark)) >= 1, "B reaps its own pin")
+    } finally clientB.shutdown()
+  }
+
+  test("a query that pins and then throws leaves no checkpointed RDD after its reap") {
+    import org.apache.spark.sql.functions._
+    Engine.reapLocalCheckpoints(spark)
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val boom = udf((v: Long) => { if (v == 7L) throw new IllegalStateException("boom"); v })
+    var pinnedIds = Set.empty[Int]
+    try {
+      val pinned = Tables.pin(spark.range(100).toDF("v"))
+      pinnedIds = newCheckpointed(before)
+      intercept[org.apache.spark.SparkException](pinned.select(boom(col("v"))).collect())
+    } finally Engine.reapLocalCheckpoints(spark)
+    assert(pinnedIds.nonEmpty, "the pin materialized")
+    assert(newCheckpointed(before).isEmpty)
+  }
+
+  test("reap leaves no checkpointed RDD from every pin form: x41, x142, distributed CC") {
+    import spark.implicits._
+    val nodes = (1L to 6L).toDF("id")
+    val edges = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("a", "b")
+    val forms = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "x41" -> (() => SparkEntry.queries("x41_minhash_lsh")(spark, sfDir)),
+      "x142" -> (() => SparkEntry.queries("x142_corr_matrix")(spark, sfDir)),
+      // localMaxEdges = 0 forces the distributed loop and its lazy pins
+      "cc" -> (() => graft.operators.DedupQueries.connectedComponents(nodes, edges, 25, 0L)))
+    for ((name, build) <- forms) {
+      Engine.reapLocalCheckpoints(spark)
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      try {
+        assert(build().collect().nonEmpty, name)
+        assert(newCheckpointed(before).nonEmpty, s"$name made no pin")
+      } finally Engine.reapLocalCheckpoints(spark)
+      assert(newCheckpointed(before).isEmpty, s"$name left pins behind")
+    }
   }
 }
