@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.GraftPins
 import org.apache.spark.sql.SparkSession
 
 /** Canonical engine session: local[cpus] with the engine defaults, the
@@ -11,6 +12,16 @@ import org.apache.spark.sql.SparkSession
   * Bench). */
 object Engine {
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** CodeGenerator's cache is keyed on (context classloader, code text).
+    * With artifact isolation on (Spark's default) every session clone gets
+    * its own artifact state and its tasks run under a fresh executor
+    * classloader, and every `writeStream.start()` clones the session: each
+    * streaming query recompiled every generated class, and the JIT started
+    * over on each. The engine adds no session artifacts (no addArtifact or
+    * addJar), so isolation buys it nothing. Spark reads the flag when a
+    * session is created, so it belongs on the builder. */
+  private[graft] val SharedCodeCache: (String, String) = "spark.sql.artifact.isolation.enabled" -> "false"
 
   /** `defaults` apply after the engine base confs but BEFORE the
     * `SPARK_GRAFT_CONF` env overrides, so experiments always win. */
@@ -35,6 +46,8 @@ object Engine {
       // each evicts round-robin, so every warm query pays a janino recompile
       // (~0.5–1 s). Sized to hold the whole suite's generated classes.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
+      // one compiled class per code text across streaming queries
+      .config(SharedCodeCache._1, SharedCodeCache._2)
       // Named SQL catalog over the engine's DSv2 connector: three-part
       // names (`SELECT … FROM graft.sf001.lineitem`) resolve through
       // sources.GraftCatalog → GraftDataTable — the same pushdown +
@@ -78,9 +91,7 @@ object Engine {
     * Pins made by other threads are left alone, so concurrent clients of
     * one session can each reap after their own queries. */
   def reapLocalCheckpoints(spark: SparkSession): Int = {
-    val live = spark.sparkContext.getPersistentRDDs
-    val mine = Tables.takePins().flatMap(live.get)
-    mine.foreach(_.unpersist(blocking = false))
-    mine.size
+    val sc = spark.sparkContext
+    Tables.takePins().count(GraftPins.release(sc, _))
   }
 }

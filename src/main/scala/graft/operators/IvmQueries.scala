@@ -51,8 +51,9 @@ object IvmQueries {
     * synthetic inserts cycling the priority domain.
     *
     * 100 TB shape: maintenance cost is O(|batch|) + a join bounded by the
-    * VIEW size (groups), never the base table — the delta aggregate is
-    * |groups| rows and broadcasts; the base is only touched when the view
+    * VIEW size (groups), never the base table — both join sides are
+    * |groups| rows (a full outer join has no broadcast side, so it takes
+    * no broadcast hint); the base is only touched when the view
     * is first built (or a non-self-maintainable aggregate forces the
     * re-scan). IvmSpec proves the defining contract: maintained view ≡
     * full recompute over the mutated base, bit-exact. */
@@ -62,7 +63,7 @@ object IvmQueries {
       .agg(sum(col("dn")).as("n0"), sum(col("ds")).as("s0"))
     val deltas = chg.unionAll(ins)
       .groupBy(col("g")).agg(sum(col("dn")).as("dn"), sum(col("ds")).as("ds"))
-    view0.join(broadcast(deltas), Seq("g"), "full_outer")
+    view0.join(deltas, Seq("g"), "full_outer")
       .select(col("g").as("o_orderpriority"),
         (coalesce(col("n0"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n_orders"),
         (coalesce(col("s0"), lit(0L)) + coalesce(col("ds"), lit(0L))).as("sc"))

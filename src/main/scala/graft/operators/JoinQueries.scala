@@ -181,7 +181,7 @@ object JoinQueries {
       .select(col("c_custkey").as("k"), lit(null).cast("string").as("u_name"),
         lit(null).cast("int").as("u_nat"), lit(null).cast("double").as("u_bal"),
         lit(null).cast("string").as("u_seg"), lit("D").as("op"))
-    val ins = broadcast(c.agg(max(col("c_custkey")).as("mx")))
+    val ins = c.agg(max(col("c_custkey")).as("mx"))
       .select(explode(sequence(lit(1), lit(20))).as("i"), col("mx"))
       .select((col("mx") + col("i")).as("k"),
         concat(lit("Customer#new-"), col("i").cast("string")).as("u_name"),

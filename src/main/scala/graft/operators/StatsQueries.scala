@@ -83,7 +83,7 @@ object StatsQueries {
         .groupBy(col("col_name"), col("bin")).agg(count(lit(1)).as("cnt"))
     }.reduce(_.unionAll(_))
     val grid = statCols.map(c =>
-      broadcast(bounds).select(lit(c).as("col_name"),
+      bounds.select(lit(c).as("col_name"),
         explode(sequence(lit(0L), lit(nBins - 1L))).as("bin"),
         col(s"mn_$c").as("mn"), col(s"mx_$c").as("mx"))).reduce(_.unionAll(_))
     grid.join(binned, Seq("col_name", "bin"), "left")

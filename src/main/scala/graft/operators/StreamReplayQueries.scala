@@ -248,7 +248,7 @@ object StreamReplayQueries {
         op: String, seq: Int): DataFrame =
       u.filter(pred).select(col("k"), cExpr.as("c"), lit(op).as("op"),
         lit(seq.toLong).as("seq"))
-    val insKeys = broadcast(u.agg(max(col("k")).as("mx")))
+    val insKeys = u.agg(max(col("k")).as("mx"))
       .select(explode(sequence(lit(1L), lit(20L))).as("i"), col("mx"))
       .select((col("mx") + col("i")).as("k"), col("i"))
     val b1 = chg(col("k") % 30 === 0, col("c") + 1000L, "U", 1)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StructField, StructType}
@@ -13,6 +13,8 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *
   * Spark-first shape: readStream(topic) → from_json → required-field filter →
   * foreachBatch { date-partitioned parquet append + snapshot-log commit }.
+  * Each trigger is one scan of its topic batch and one Spark job: the
+  * committed row and reject counts are an [[Observation]] on the write.
   *
   *  - Exactly-once: foreachBatch is wrapped in a batchId check against the
   *    snapshot log (the reference gets this from Iceberg's atomic commit,
@@ -244,10 +246,12 @@ object IngestJob {
       batch: DataFrame, tableDir: String, batchId: Long,
       required: Seq[String], partCol: org.apache.spark.sql.Column,
       keepKey: Boolean = false): Unit = {
-    val ok = required.foldLeft(batch)((df, c) => df.filter(col(c).isNotNull))
-    val good = ok.withColumn("p_date", partCol).cache()
-    val nGood = good.count()
-    val nAll = batch.count()
+    val ok = required.map(col(_).isNotNull).reduceOption(_ && _).getOrElse(lit(true))
+    // both counts ride the write's own scan: observed on the unfiltered
+    // batch, so the topic batch is read once, by one job
+    val counts = Observation()
+    val good = batch.observe(counts, count(lit(1)).as("all"), count(when(ok, 1)).as("good"))
+      .filter(ok).withColumn("p_date", partCol)
     (if (keepKey) good else good.drop("key"))
       // OVERWRITE of this batch's directory, not append: a replay
       // after a crash between data write and snapshot commit rewrites
@@ -262,8 +266,9 @@ object IngestJob {
       // batch=<id> directory = the snapshot boundary: time-travel
       // reads prune on it (Iceberg's VERSION AS OF equivalent)
       .parquet(s"$tableDir/data/batch=$batchId")
+    val m = counts.get
+    val (nAll, nGood) = (m("all").asInstanceOf[Long], m("good").asInstanceOf[Long])
     commitSnapshot(tableDir, batchId, nGood, nAll - nGood)
-    good.unpersist()
   }
 
   /** Read the ingested table at its current snapshot (A4 scan stand-in —

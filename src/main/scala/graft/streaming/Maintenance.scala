@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Table maintenance for the ingest table: small-file compaction, snapshot
@@ -296,10 +296,13 @@ object Maintenance {
       .option("mergeSchema", "true")
       .parquet(candidates.map(b => s"$tableDir/data/batch=$b"): _*)
     val staged = stagePath(tableDir, "batch", newId)
+    // counted on the rewrite itself: no second job over the staged files
+    val written = Observation()
     val rows = applyDeletes(spark, tableDir, df, cms).drop("batch")
       .repartition(nFiles, col("p_date"))
+      .observe(written, count(lit(1)).as("rows"))
     rows.write.mode("overwrite").partitionBy("p_date").parquet(staged.toString)
-    val n = spark.read.parquet(staged.toString).count()
+    val n = written.get("rows").asInstanceOf[Long]
     val line = s"""{"batch":$newId,"rows":$n,"rejects":0,"committed":true,""" +
       s""""compacts":[${candidates.mkString(",")}]}"""
     if (!commitStaged(tableDir, cms, line,

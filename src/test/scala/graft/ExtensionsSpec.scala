@@ -109,6 +109,25 @@ class ExtensionsSpec extends SparkSpec {
     cached.unpersist()
   }
 
+  test("reaping a pin logs no warning") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import spark.implicits._
+    val warned = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("reap-warnings", null, null, false, Array.empty) {
+      override def append(e: LogEvent): Unit = { warned.add(e.getMessage.getFormattedMessage); () }
+    }
+    appender.start()
+    val root = LogManager.getContext(false).asInstanceOf[LoggerContext].getConfiguration.getRootLogger
+    Engine.reapLocalCheckpoints(spark)
+    assert(Tables.pin(Seq(1, 2, 3).toDF("v")).count() == 3)
+    root.addAppender(appender, Level.WARN, null)
+    try assert(Engine.reapLocalCheckpoints(spark) == 1)
+    finally root.removeAppender("reap-warnings")
+    assert(warned.isEmpty, warned)
+  }
+
   test("literal arguments: integral literals only, anything else is named and rejected") {
     import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
     val builder = GraftExtensions.functions.map { case (id, _, b) => id.funcName -> b }.toMap

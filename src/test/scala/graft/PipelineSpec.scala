@@ -199,4 +199,65 @@ class PipelineSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$work/table/_snapshots.jsonl"))
     assert(log.contains("\"rejects\":2"), log)
   }
+
+  private def startTrades(s: org.apache.spark.sql.SparkSession, work: String,
+      topic: FileTopic, required: Seq[String] = Seq("trade_id", "symbol")) =
+    IngestJob.start(s, topic, s"$work/table", AnalyticsPipeline.tradeSchema,
+      required, "ts_event", s"$work/ckpt",
+      org.apache.spark.sql.streaming.Trigger.AvailableNow())
+
+  test("an AvailableNow ingest of a non-empty topic fires exactly one Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val work = tmpDir("graft-onejob")
+    val topic = FileTopic(s"$work/topic")
+    TradeGen.produce(spark, topic, 500L)
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).foreach(groups.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val q = try {
+      val q = startTrades(spark, work, topic)
+      q.awaitTermination()
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      q
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // a streaming query runs its jobs under its run id as job group
+    import scala.jdk.CollectionConverters._
+    assert(groups.asScala.count(_ == q.runId.toString) == 1, groups)
+    assert(q.recentProgress.map(_.numInputRows).sum == 500L, "the topic batch is read once")
+    assert(IngestJob.readTable(spark, s"$work/table").count() == 500L)
+  }
+
+  test("a second ingest of the same shape compiles no code in an engine-configured session") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // the streaming query clones this session, as it clones an Engine one
+    val s = spark.newSession()
+    s.conf.set(Engine.SharedCodeCache._1, Engine.SharedCodeCache._2)
+    val work = tmpDir("graft-codegen")
+    val topic = FileTopic(s"$work/topic")
+    TradeGen.produce(s, topic, 200L, seed = 1L)
+    startTrades(s, work, topic).awaitTermination()
+    TradeGen.produce(s, topic, 200L, seed = 2L)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    startTrades(s, work, topic).awaitTermination()
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == before)
+    assert(IngestJob.committedBatches(s"$work/table") == Set(0L, 1L))
+    assert(IngestJob.readTable(s, s"$work/table").count() == 400L)
+  }
+
+  test("a batch in which every row is rejected commits rows:0 and counts every reject") {
+    val work = tmpDir("graft-allreject")
+    val topic = FileTopic(s"$work/topic")
+    import spark.implicits._
+    topic.publish(Seq(
+      ("k1", "{not json at all"),
+      ("k2", """{"trade_id":"t2","price":1.0}"""),
+      ("k3", """{"symbol":"AAPL","price":2.0}""")).toDF("key", "value"))
+    startTrades(spark, work, topic, Seq("trade_id", "symbol", "price")).awaitTermination()
+    val log = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$work/table/_snapshots.jsonl"))
+    assert(log.trim == """{"batch":0,"rows":0,"rejects":3,"committed":true}""", log)
+  }
 }
