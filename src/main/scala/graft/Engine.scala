@@ -23,6 +23,21 @@ object Engine {
     * session is created, so it belongs on the builder. */
   private[graft] val SharedCodeCache: (String, String) = "spark.sql.artifact.isolation.enabled" -> "false"
 
+  /** Local files go through [[ForkFreeLocalFileSystem]] (FileSystem API)
+    * and [[ForkFreeLocalFs]] (FileContext, which Spark's streaming
+    * checkpoint manager uses). Without libhadoop the stock local classes
+    * fork `chmod` for every created file and directory and `readlink` for
+    * every checkpoint rename: about 150 processes per cycle op, each
+    * costing milliseconds, on a path that only commits files.
+    *
+    * Hadoop's `FileSystem.CACHE` is keyed by scheme and user, not by conf,
+    * so the first `FileSystem.get("file:…")` in a JVM fixes the class for
+    * every later caller, whatever its conf says. [[session]] is the first
+    * call in every main, and the test fixture takes the same settings. */
+  private[graft] val LocalFs: Seq[(String, String)] = Seq(
+    "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
+
   /** `defaults` apply after the engine base confs but BEFORE the
     * `SPARK_GRAFT_CONF` env overrides, so experiments always win. */
   def builder(defaults: (String, String)*): SparkSession.Builder = {
@@ -48,6 +63,8 @@ object Engine {
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       // one compiled class per code text across streaming queries
       .config(SharedCodeCache._1, SharedCodeCache._2)
+      // no forked process per local file
+      .config(LocalFs.toMap)
       // Named SQL catalog over the engine's DSv2 connector: three-part
       // names (`SELECT … FROM graft.sf001.lineitem`) resolve through
       // sources.GraftCatalog → GraftDataTable — the same pushdown +

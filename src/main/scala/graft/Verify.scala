@@ -45,6 +45,8 @@ object Verify {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // the engine's local FileSystem: the gate reads through the same I/O path
+      .config(Engine.LocalFs.toMap)
     // same experiment seam as Engine.builder: lets the oracle gate run in
     // alternate configurations (e.g. tableSource=graft — the whole suite
     // through the DSv2 connector) without touching the driver contract

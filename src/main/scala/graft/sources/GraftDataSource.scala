@@ -89,6 +89,9 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
 }
 
 object GraftDataSource {
+  /** The one Hadoop conf of the driver-side footer and stats reads. */
+  private lazy val hadoopConf = new Configuration()
+
   /** Resolve `path` to concrete parquet files (see class doc). */
   def resolveFiles(path: String): Seq[String] = {
     val f = new java.io.File(path)
@@ -101,10 +104,9 @@ object GraftDataSource {
           s"${live.map(_._2).mkString(",")}); the data connector cannot apply " +
           "MOR deletes — run Maintenance.rewriteDeletes/compact first or read " +
           "via IngestJob.readTable")
-      val visible = graft.streaming.Maintenance.visibleBatches(path)
-      visible.toSeq.sorted.flatMap { b =>
-        listParquet(new java.io.File(f, s"data/batch=$b"))
-      }
+      val visible = graft.streaming.Maintenance.visibleIn(cms).sorted
+      graft.streaming.IngestJob.batchFiles(hadoopConf, path, visible)
+        .flatMap(_._2.map(_.getPath.toString))
     } else listParquet(f)
   }
 
@@ -118,7 +120,7 @@ object GraftDataSource {
     }
 
   private[sources] def footerSchema(file: String): MessageType = {
-    val in = HadoopInputFile.fromPath(new HPath(file), new Configuration())
+    val in = HadoopInputFile.fromPath(new HPath(file), hadoopConf)
     val r = ParquetFileReader.open(in)
     try r.getFooter.getFileMetaData.getSchema finally r.close()
   }
@@ -154,7 +156,7 @@ object GraftDataSource {
   private[sources] def statsOf(files: Seq[String]): (Long, Long) =
     files.foldLeft((0L, 0L)) { case ((b, r), f) =>
       val (fb, fr) = fileStats.computeIfAbsent(f, { path =>
-        val in = HadoopInputFile.fromPath(new HPath(path), new Configuration())
+        val in = HadoopInputFile.fromPath(new HPath(path), hadoopConf)
         val rd = ParquetFileReader.open(in)
         // length from the SAME Hadoop layer that reads the footer:
         // java.io.File.length returns 0 for any non-local filesystem,

@@ -1,10 +1,19 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, GraftExprBridge, Observation, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DateType, LongType, StructField, StructType}
 
 /** A3 — the continuous JSON→columnar ingest operator (the role Redpanda's
   * datalake translator plays in the reference: validate against the topic
@@ -27,6 +36,9 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *    time-range queries prune partitions; within a micro-batch we do NOT
   *    coalesce — file count per trigger = shuffle parallelism, compaction is
   *    a separate concern.
+  *  - Reads resolve through the commit log ([[readBatches]]): the visible
+  *    batch dirs are listed on the driver and the schema comes from one
+  *    footer per batch, so resolving a table fires no Spark job.
   */
 object IngestJob {
   /** Snapshot-log line: our mini-Iceberg commit record. Appends under the
@@ -83,7 +95,7 @@ object IngestJob {
     * micro-batch decodes with the LATEST registered schema at that moment,
     * so a v2 registered mid-stream applies from the next batch without a
     * restart; rows already written under v1 read null for v2-only columns
-    * (mergeSchema in readPartitioned). Refuses to start for an unregistered
+    * (the footer union of [[readBatches]]). Refuses to start for an unregistered
     * subject — the registry's "schema must exist before data" contract
     * (validation/e2e.sh:67-105, CLAUDE.md:350-351). */
   def startWithRegistry(
@@ -272,32 +284,93 @@ object IngestJob {
   }
 
   /** Read the ingested table at its current snapshot (A4 scan stand-in —
-    * resolves through the data dir; real Iceberg REST catalog swaps in
+    * the commit log plays the catalog; a real Iceberg REST catalog swaps in
     * behind this call). Only COMMITTED batches are visible — a batch whose
     * data landed but whose snapshot commit didn't is invisible until its
     * replay completes (the snapshot log is the source of truth, as in
-    * Iceberg). batch/p_date stay available for pruned reads via
-    * readPartitioned. */
+    * Iceberg). */
   def readTable(spark: SparkSession, tableDir: String): DataFrame = {
     // visible = committed − compacted-away (Maintenance.compact rewrites
     // small snapshots into one and records what it replaced); live
     // equality-delete files (merge-on-read MERGE) are applied on top — a
     // no-op unless an un-rewritten MOR merge exists.
     val cms = Maintenance.commits(tableDir)
-    val visible = Maintenance.visibleBatches(tableDir).toSeq
-    val raw = readPartitioned(spark, tableDir)
-      .filter(col("batch").isInCollection(visible))
-    Maintenance.applyDeletes(spark, tableDir, raw, cms)
+    Maintenance.applyDeletes(spark, tableDir,
+      readBatches(spark, tableDir, Maintenance.visibleIn(cms)), cms)
       .drop("p_date").drop("batch")
   }
 
-  /** Partition-pruning read: filters on batch / p_date prune directories.
-    * mergeSchema unions column sets across snapshots — the schema-evolution
-    * contract of the reference's `value_schema_latest` mode (CLAUDE.md:
-    * 165-171): a column added in a later registered schema reads as null for
-    * rows ingested before it existed. */
-  def readPartitioned(spark: SparkSession, tableDir: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(s"$tableDir/data")
+  /** The named snapshots of a table as one DataFrame: the data columns,
+    * then `batch` (long) and `p_date` (date), both read from the paths.
+    * The commit log, not a directory scan, decides what is read:
+    *  - files: only the named `batch=` dirs are listed, on the driver, so a
+    *    compacted-away or uncommitted dir is never touched, and a table of
+    *    any snapshot count resolves without Spark's parallel-listing job;
+    *  - schema: the Spark row schema in the footer of one file per batch,
+    *    columns in the order they first appear in `batches` — pass them in
+    *    lineage order. A column added by a later registered schema
+    *    (`value_schema_latest`) reads null for rows written before it
+    *    existed.
+    * No Spark job fires until the result is scanned. */
+  def readBatches(spark: SparkSession, tableDir: String, batches: Seq[Long]): DataFrame = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val listed = batchFiles(conf, tableDir, batches)
+    val fields = scala.collection.mutable.LinkedHashMap.empty[String, StructField]
+    for ((_, files) <- listed; f <- files.headOption; sf <- footerSchema(conf, f).fields)
+      fields.get(sf.name) match {
+        case None => fields(sf.name) = sf
+        case Some(seen) => require(seen.dataType == sf.dataType,
+          s"$tableDir: column ${sf.name} is ${seen.dataType} in one snapshot and " +
+            s"${sf.dataType} in another; type-changing schema evolution is unsupported")
+      }
+    val data = GraftExprBridge.asNullable(StructType(fields.values.toSeq))
+    val schema = data.add("batch", LongType).add("p_date", DateType)
+    if (listed.forall(_._2.isEmpty))
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else {
+      val leaves = listed.toMap
+      val index = new InMemoryFileIndex(spark, listed.map(_._1),
+        Map("basePath" -> s"$tableDir/data"), Some(schema),
+        new FileStatusCache {
+          override def getLeafFiles(p: Path): Option[Array[FileStatus]] = leaves.get(p)
+          override def putLeafFiles(p: Path, files: Array[FileStatus]): Unit = ()
+          override def invalidateAll(): Unit = ()
+        })
+      spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, data,
+        None, new ParquetFileFormat, Map.empty)(spark))
+    }
+  }
+
+  /** The parquet files of each batch dir, sorted by path; a batch without a
+    * data dir (a delete-only merge commit) lists none. */
+  private[graft] def batchFiles(conf: Configuration, tableDir: String,
+      batches: Seq[Long]): Seq[(Path, Array[FileStatus])] = {
+    val fs = new Path(tableDir).getFileSystem(conf)
+    def leaves(p: Path): Array[FileStatus] = fs.listStatus(p).flatMap { st =>
+      val name = st.getPath.getName
+      if (st.isDirectory) leaves(st.getPath)
+      else if (name.endsWith(".parquet") && !name.startsWith(".") && !name.startsWith("_")) Array(st)
+      else Array.empty[FileStatus]
+    }
+    batches.map { b =>
+      val dir = fs.makeQualified(new Path(s"$tableDir/data/batch=$b"))
+      dir -> (try leaves(dir).sortBy(_.getPath.toString)
+        catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] })
+    }
+  }
+
+  /** The Spark row schema Spark's parquet writer stores in every footer
+    * (the parquet schema's conversion for a file another writer made). */
+  private def footerSchema(conf: Configuration, f: FileStatus): StructType = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf), HadoopReadOptions
+      .builder(conf).withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    try {
+      val meta = r.getFooter.getFileMetaData
+      Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+        .map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get).convert(meta.getSchema))
+    } finally r.close()
+  }
 
   /** Time travel (A5: "snapshot-id ≈ our snapshot-log head"; Iceberg
     * `VERSION AS OF` equivalent): the table as of snapshot `batchId` —
@@ -313,9 +386,7 @@ object IngestJob {
     require(lin.exists(_.id == batchId),
       s"snapshot $batchId not in the commit log of $tableDir")
     val upTo = lin.take(lin.indexWhere(_.id == batchId) + 1)
-    val asOf = upTo.foldLeft(Set.empty[Long]) { case (vis, c) =>
-      vis -- c.compacts + c.id
-    }.toSeq
+    val asOf = Maintenance.visibleIn(upTo)
     // expireSnapshots physically deletes replaced dirs but the log still
     // lists them; an as-of read spanning an expired snapshot must fail
     // loudly (Iceberg: "Cannot find snapshot"), not silently return the
@@ -326,9 +397,7 @@ object IngestJob {
         s"deleted by expireSnapshots; time travel to this version is no longer possible")
     // apply only the delete files and retirements INSIDE the prefix: the
     // as-of view is exactly what a reader at that commit would have seen
-    val raw = readPartitioned(spark, tableDir)
-      .filter(col("batch").isInCollection(asOf))
-    Maintenance.applyDeletes(spark, tableDir, raw, upTo)
+    Maintenance.applyDeletes(spark, tableDir, readBatches(spark, tableDir, asOf), upTo)
       .drop("p_date").drop("batch")
   }
 }

@@ -136,11 +136,14 @@ object Maintenance {
     commits(tableDir).flatMap(_.compacts).toSet
 
   /** Currently visible batch ids: committed minus compacted-away. */
-  def visibleBatches(tableDir: String): Set[Long] =
-    IngestJob.committedBatches(tableDir) -- replacedBatches(tableDir)
+  def visibleBatches(tableDir: String): Set[Long] = visibleIn(commits(tableDir)).toSet
 
-  private def visibleIn(prefix: Seq[Commit]): Seq[Long] =
-    prefix.foldLeft(Set.empty[Long]) { case (vis, c) => vis -- c.compacts + c.id }.toSeq
+  /** The batches visible after a lineage prefix, in lineage order: every
+    * committed id that no commit of the prefix replaced. */
+  private[graft] def visibleIn(prefix: Seq[Commit]): Seq[Long] = {
+    val replaced = prefix.flatMap(_.compacts).toSet
+    prefix.map(_.id).filterNot(replaced).distinct
+  }
 
   /** Live equality-delete files within a lineage prefix: delete-carrying
     * commits minus those retired inside the same prefix.
@@ -291,10 +294,7 @@ object Maintenance {
     val newId = nextId(cms)
     val totalBytes = candidates.map(b => dirSize(Paths.get(s"$tableDir/data/batch=$b"))).sum
     val nFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val df = spark.read
-      .option("basePath", s"$tableDir/data")
-      .option("mergeSchema", "true")
-      .parquet(candidates.map(b => s"$tableDir/data/batch=$b"): _*)
+    val df = IngestJob.readBatches(spark, tableDir, candidates)
     val staged = stagePath(tableDir, "batch", newId)
     // counted on the rewrite itself: no second job over the staged files
     val written = Observation()
@@ -342,9 +342,7 @@ object Maintenance {
       val cms = commits(tableDir)
       val visible = visibleIn(cms)
       require(visible.nonEmpty, s"mergeInto: no visible snapshots in $tableDir")
-      val raw = IngestJob.readPartitioned(spark, tableDir)
-        .filter(col("batch").isInCollection(visible))
-      val rows = applyDeletes(spark, tableDir, raw, cms)
+      val rows = applyDeletes(spark, tableDir, IngestJob.readBatches(spark, tableDir, visible), cms)
       val touched = rows.join(updates.select(col(key)).distinct(), Seq(key), "left_semi")
         .select(col("batch").cast("long")).distinct()
         .collect().map(_.getLong(0)).toSeq.sorted
@@ -357,9 +355,11 @@ object Maintenance {
       val merged = survivors.unionByName(updates.select(dataCols.map(col).toIndexedSeq: _*))
       val newId = nextId(cms)
       val staged = stagePath(tableDir, "batch", newId)
+      val written = Observation()
       merged.withColumn("p_date", to_date(col(tsCol)))
+        .observe(written, count(lit(1)).as("rows"))
         .write.mode("overwrite").partitionBy("p_date").parquet(staged.toString)
-      val n = spark.read.parquet(staged.toString).count()
+      val n = written.get("rows").asInstanceOf[Long]
       val line = s"""{"batch":$newId,"rows":$n,"rejects":0,"committed":true,""" +
         s""""compacts":[${touched.mkString(",")}]}"""
       if (commitStaged(tableDir, cms, line,
@@ -397,8 +397,10 @@ object Maintenance {
     // rows. They ride the same equality-delete file as the upsert keys; a
     // pure-tombstone commit carries a delete file and no data snapshot.
     val n0 = updates.count()
+    val written = Observation()
     if (n0 > 0)
       updates.withColumn("p_date", to_date(col(tsCol)))
+        .observe(written, count(lit(1)).as("rows"))
         .write.mode("overwrite").partitionBy("p_date").parquet(stagedData.toString)
     val delKeys = tombstoneKeys
       .map(tk => updates.select(col(key)).unionByName(
@@ -406,7 +408,7 @@ object Maintenance {
       .getOrElse(updates.select(col(key)))
       .distinct()
     delKeys.write.mode("overwrite").parquet(stagedDel.toString)
-    val n = if (n0 > 0) spark.read.parquet(stagedData.toString).count() else 0L
+    val n = if (n0 > 0) written.get("rows").asInstanceOf[Long] else 0L
     val line = s"""{"batch":$newId,"rows":$n,"rejects":0,"committed":true,""" +
       s""""deleteKey":"$key"}"""
     val moves =
@@ -430,9 +432,7 @@ object Maintenance {
     val cms = commits(tableDir)
     val dels = liveDeletes(cms)
     if (dels.isEmpty) return None
-    val visible = visibleIn(cms)
-    val raw = IngestJob.readPartitioned(spark, tableDir)
-      .filter(col("batch").isInCollection(visible))
+    val raw = IngestJob.readBatches(spark, tableDir, visibleIn(cms))
     val cleaned = applyDeletes(spark, tableDir, raw, cms)
     // snapshots that lost rows = snapshots holding a key of a later delete
     val touched = {
@@ -459,9 +459,11 @@ object Maintenance {
     val n = if (touched.isEmpty) {
       Files.createDirectories(staged); 0L
     } else {
-      val survivors = cleaned.filter(col("batch").isInCollection(touched)).drop("batch")
-      survivors.write.mode("overwrite").partitionBy("p_date").parquet(staged.toString)
-      spark.read.parquet(staged.toString).count()
+      val written = Observation()
+      cleaned.filter(col("batch").isInCollection(touched)).drop("batch")
+        .observe(written, count(lit(1)).as("rows"))
+        .write.mode("overwrite").partitionBy("p_date").parquet(staged.toString)
+      written.get("rows").asInstanceOf[Long]
     }
     val line = s"""{"batch":$newId,"rows":$n,"rejects":0,"committed":true,""" +
       s""""compacts":[${touched.mkString(",")}],""" +

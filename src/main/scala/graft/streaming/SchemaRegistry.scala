@@ -21,7 +21,7 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   *    field must keep its exact type, and removing a field that ingest
   *    requires would break replay, so removals are rejected too. Data
   *    written under v1 read under v2 yields null for v2-only columns
-  *    (mergeSchema in [[IngestJob.readPartitioned]]).
+  *    (the per-batch footer union in [[IngestJob.readBatches]]).
   *
   * Storage is one JSON file per version under `dir/<subject>/v<n>.json`
   * (Spark's own StructType JSON serialization), so the registry state is

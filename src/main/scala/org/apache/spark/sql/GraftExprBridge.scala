@@ -13,4 +13,8 @@ object GraftExprBridge {
   /** [[org.apache.spark.sql.types.AbstractDataType]] is private[sql]; alias
     * it so graft expressions can declare `inputTypes` (ExpectsInputTypes). */
   type AbstractType = org.apache.spark.sql.types.AbstractDataType
+  /** `StructType.asNullable` is private[spark]; file sources read every
+    * column as nullable, whatever the writer declared. */
+  def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+    s.asNullable
 }

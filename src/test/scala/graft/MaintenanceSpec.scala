@@ -137,7 +137,7 @@ class MaintenanceSpec extends SparkSpec {
     ingestOnce(work, 50, seed = 1); ingestOnce(work, 50, seed = 2); ingestOnce(work, 50, seed = 3)
     val table = s"$work/table"
     // two keys that live ONLY in snapshot 1
-    val ids = IngestJob.readPartitioned(spark, table)
+    val ids = IngestJob.readBatches(spark, table, Seq(1L))
       .filter(col("batch") === 1).select("trade_id").orderBy("trade_id")
       .as[String].take(2).toSeq
     val before = IngestJob.readTable(spark, table)
@@ -168,7 +168,7 @@ class MaintenanceSpec extends SparkSpec {
     val work = tmpDir("graft-mor")
     ingestOnce(work, 50, seed = 10); ingestOnce(work, 50, seed = 11)
     val table = s"$work/table"
-    val ids = IngestJob.readPartitioned(spark, table)
+    val ids = IngestJob.readBatches(spark, table, Seq(0L))
       .filter(col("batch") === 0).select("trade_id").orderBy("trade_id")
       .as[String].take(2).toSeq
     val before = IngestJob.readTable(spark, table)

@@ -260,4 +260,42 @@ class PipelineSpec extends SparkSpec {
       java.nio.file.Paths.get(s"$work/table/_snapshots.jsonl"))
     assert(log.trim == """{"batch":0,"rows":0,"rejects":3,"committed":true}""", log)
   }
+
+  test("a table of 40 visible snapshots resolves with no Spark job and equals the mergeSchema read") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val table = s"${tmpDir("graft-resolve40")}/table"
+    val trades = TradeGen.trades(spark, 400L, seed = 7L)
+      .withColumn("batch", unix_seconds(col("ts_event")) % 40)
+      .withColumn("p_date", to_date(col("ts_event")))
+    // snapshots 0-19 predate the registry's `venue` column, 20-39 carry it
+    trades.filter(col("batch") < 20)
+      .write.partitionBy("batch", "p_date").parquet(s"$table/data")
+    trades.filter(col("batch") >= 20).withColumn("venue", lit("XNAS"))
+      .write.mode("append").partitionBy("batch", "p_date").parquet(s"$table/data")
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$table/_snapshots.jsonl"),
+      (0 until 40).map(b => s"""{"batch":$b,"rows":10,"rejects":0,"committed":true}\n""").mkString)
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val resolved = try {
+      val t = IngestJob.readTable(spark, table)
+      t.queryExecution.executedPlan // resolved and planned, not run
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
+      t
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0)
+
+    val merged = spark.read.option("mergeSchema", "true").parquet(s"$table/data")
+      .drop("p_date").drop("batch")
+    assert(resolved.schema == merged.schema)
+    assert(resolved.columns.last == "venue")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+    assert(rows(resolved) == rows(merged))
+    assert(resolved.filter(col("venue").isNull).count() == 200L)
+  }
 }

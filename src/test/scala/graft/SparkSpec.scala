@@ -13,6 +13,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    // the engine's local FileSystem, so the specs exercise its I/O path
+    .config(Engine.LocalFs.toMap)
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
