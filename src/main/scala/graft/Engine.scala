@@ -67,8 +67,8 @@ object Engine {
       .config(LocalFs.toMap)
       // Named SQL catalog over the engine's DSv2 connector: three-part
       // names (`SELECT … FROM graft.sf001.lineitem`) resolve through
-      // sources.GraftCatalog → GraftDataTable — the same pushdown +
-      // snapshot-isolation path as spark.read.format("graft"). Namespaces
+      // sources.GraftCatalog to Spark's parquet scan over the resolved
+      // files — the same path as spark.read.format("graft"). Namespaces
       // are directories under root; the sfNNN aliases exist because the
       // testdata dir names carry dots SQL identifiers can't (unquoted).
       .config("spark.sql.catalog.graft", "graft.sources.GraftCatalog")

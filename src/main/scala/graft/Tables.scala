@@ -72,10 +72,6 @@ object Tables {
     if (mode == "off") load(spark, dir, name)
     else {
       evictStopped()
-      // tableSource is part of the key: flipping it to/from "graft"
-      // mid-session must not serve DataFrames resolved through the OTHER
-      // source out of the cache.
-      val source = spark.conf.get("spark.graft.tableSource", "parquet")
       // memory mode caps what it pins (r16, measured at sf10): columnar-
       // caching a text-heavy or fact-scale table made compute-dense
       // queries SLOWER than parquet re-reads — x151 ran 135 s against the
@@ -101,10 +97,10 @@ object Tables {
         // a cacheMaxBytes flip mid-session changes the pin decision; the
         // displaced sibling entry must not keep its blocks persisted
         // (r18, ADVICE)
-        dfCache.remove((spark, s"$mode/$source/${!pin}", dir, name))
+        dfCache.remove((spark, s"$mode/${!pin}", dir, name))
           .foreach(old => if (!pin) { old.unpersist(); () })
       }
-      dfCache.getOrElseUpdate((spark, s"$mode/$source/$pin", dir, name), {
+      dfCache.getOrElseUpdate((spark, s"$mode/$pin", dir, name), {
         val df = load(spark, dir, name)
         if (!pin) df
         else {
@@ -121,13 +117,6 @@ object Tables {
 
   private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // tableSource=graft routes resolution through the engine's own DSv2
-    // connector (sources.GraftDataSource — column/filter pushdown through
-    // OUR catalog seam); default stays Spark's built-in parquet source.
-    // The connector already normalizes timestamps (ns→µs, TIMESTAMP), so
-    // the post-load fixups below are no-ops on that path.
-    if (spark.conf.get("spark.graft.tableSource", "parquet") == "graft")
-      return spark.read.format("graft").load(s"$dir/$name.parquet")
     val raw = spark.read.parquet(s"$dir/$name.parquet")
     val df = raw.schema.fields
       .find(f => f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType)

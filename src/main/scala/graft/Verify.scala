@@ -48,8 +48,8 @@ object Verify {
       // the engine's local FileSystem: the gate reads through the same I/O path
       .config(Engine.LocalFs.toMap)
     // same experiment seam as Engine.builder: lets the oracle gate run in
-    // alternate configurations (e.g. tableSource=graft — the whole suite
-    // through the DSv2 connector) without touching the driver contract
+    // alternate configurations (e.g. tableCache=off — every query re-reads
+    // its tables) without changing the main's arguments or output
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("=")).foreach { kv =>
       val Array(k, v) = kv.split("=", 2); b.config(k, v)
     })

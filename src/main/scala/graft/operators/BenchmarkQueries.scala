@@ -354,10 +354,11 @@ object BenchmarkQueries {
     "AS BIGINT)) / CAST(10000.0 AS DOUBLE)"
 
   /** The same five queries as Spark SQL over the NAMED catalog's three-part
-    * table names (`graft.<ns>.<table>` → sources.GraftCatalog →
-    * GraftDataTable) — the SQL surface and the DSv2 connector as one path:
-    * projection/filter pushdown and footer statistics (broadcast-able
-    * dimensions) all come from the connector, no temp views, no ANALYZE.
+    * table names (`graft.<ns>.<table>` → sources.GraftCatalog → Spark's
+    * parquet scan over the resolved files) — the SQL surface and the DSv2
+    * connector as one path: projection/filter pushdown and size statistics
+    * (broadcast-able dimensions) come with the scan, no temp views, no
+    * ANALYZE.
     * Value-identical to `queries` (BenchmarkSpec asserts it per query). */
   /** g_ → three-part-name rewrite, anchored on table names (like [[stripG]]
     * — a bare replace would mangle `avg_yearly`). */

@@ -153,17 +153,13 @@ object LmQueries {
     * re-injected as a local relation per use; the doubles are the exact
     * values the inline fit computes, so hashes are unchanged. */
   private val dsirRatioCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String), Array[(Long, Double)]]
+    (org.apache.spark.sql.SparkSession, String), Array[(Long, Double)]]
 
   private[operators] def dsirRatioCached(
       s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
     val it = dsirRatioCache.entrySet().iterator()
     while (it.hasNext) if (it.next().getKey._1.sparkContext.isStopped) it.remove()
-    // tableSource is part of the key (r18, ADVICE — the Tables.dfCache
-    // convention): a fit computed under 'parquet' must not be served
-    // after the session flips to 'graft', and vice versa
-    val source = s.conf.get("spark.graft.tableSource", "parquet")
-    val rows = dsirRatioCache.computeIfAbsent((s, d, source), _ =>
+    val rows = dsirRatioCache.computeIfAbsent((s, d), _ =>
       dsirRatio(spread(t(s, d, "documents"))).collect()
         .map(r => (r.getLong(0), r.getDouble(1))))
     import s.implicits._

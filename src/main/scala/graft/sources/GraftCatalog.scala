@@ -3,6 +3,7 @@ package graft.sources
 import java.util
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
@@ -32,14 +33,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * The catalog is READ-ONLY by design (the write path is the streaming
   * ingest + snapshot commit protocol, IngestJob — not SQL DDL): every
   * mutating operation throws. Each `loadTable` resolves the CURRENT
-  * snapshot once; the resulting relation is snapshot-isolated for its
-  * lifetime (GraftDataTable pins the file list), and a re-query picks up
-  * new commits — standard catalog freshness semantics.
+  * snapshot once, files and schema together; the resulting relation is
+  * snapshot-isolated for its lifetime (its file index serves exactly the
+  * resolved files), and a re-query picks up new commits — standard
+  * catalog freshness semantics.
   *
-  * Scale note: scans loaded through this catalog report statistics
-  * (file bytes + footer row counts, [[GraftDataSource.statsOf]]), so
-  * Spark's join planning sees dimension tables as broadcast-able through
-  * the catalog path just like through the built-in parquet source.
+  * Scale note: the relation's scan is Spark's own parquet scan, so it
+  * reports size statistics from the resolved files' lengths and Spark's
+  * join planning sees dimension tables as broadcast-able through the
+  * catalog path just like through the built-in parquet source.
   *
   * Reference seam (SURVEY §1): this is the stand-in for the reference's
   * Iceberg REST catalog (`resources/setup_polaris_catalog.sh:20-150`) —
@@ -78,11 +80,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   }
 
   override def loadTable(ident: Identifier): Table = tablePath(ident) match {
-    case Some(path) =>
-      // resolve ONCE and pass both the pinned files and the schema derived
-      // from them — a snapshot commit between two resolves would desync them
-      val files = GraftDataSource.resolveFiles(path)
-      new GraftDataTable(path, GraftDataSource.unionSchema(files), Some(files))
+    case Some(path) => GraftDataSource.table(SparkSession.active, path)
     case None => throw new NoSuchTableException(ident)
   }
 

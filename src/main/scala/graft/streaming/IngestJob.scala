@@ -2,11 +2,12 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{DataFrame, GraftExprBridge, Observation, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
@@ -315,30 +316,45 @@ object IngestJob {
   def readBatches(spark: SparkSession, tableDir: String, batches: Seq[Long]): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
     val listed = batchFiles(conf, tableDir, batches)
-    val fields = scala.collection.mutable.LinkedHashMap.empty[String, StructField]
-    for ((_, files) <- listed; f <- files.headOption; sf <- footerSchema(conf, f).fields)
-      fields.get(sf.name) match {
-        case None => fields(sf.name) = sf
-        case Some(seen) => require(seen.dataType == sf.dataType,
-          s"$tableDir: column ${sf.name} is ${seen.dataType} in one snapshot and " +
-            s"${sf.dataType} in another; type-changing schema evolution is unsupported")
-      }
-    val data = GraftExprBridge.asNullable(StructType(fields.values.toSeq))
+    val data = dataSchema(conf, tableDir, listed.flatMap(_._2.headOption))
     val schema = data.add("batch", LongType).add("p_date", DateType)
     if (listed.forall(_._2.isEmpty))
       spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     else {
-      val leaves = listed.toMap
-      val index = new InMemoryFileIndex(spark, listed.map(_._1),
-        Map("basePath" -> s"$tableDir/data"), Some(schema),
-        new FileStatusCache {
-          override def getLeafFiles(p: Path): Option[Array[FileStatus]] = leaves.get(p)
-          override def putLeafFiles(p: Path, files: Array[FileStatus]): Unit = ()
-          override def invalidateAll(): Unit = ()
-        })
+      val index = fixedIndex(spark, listed, Map("basePath" -> s"$tableDir/data"), schema)
       spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, data,
         None, new ParquetFileFormat, Map.empty)(spark))
     }
+  }
+
+  /** A file index over files listed up front: each root path serves its
+    * listed files, so Spark never lists and the file set never changes. */
+  private[graft] def fixedIndex(spark: SparkSession, listed: Seq[(Path, Array[FileStatus])],
+      options: Map[String, String], schema: StructType): InMemoryFileIndex = {
+    val leaves = listed.toMap
+    new InMemoryFileIndex(spark, listed.map(_._1), options, Some(schema),
+      new FileStatusCache {
+        override def getLeafFiles(p: Path): Option[Array[FileStatus]] = leaves.get(p)
+        override def putLeafFiles(p: Path, files: Array[FileStatus]): Unit = ()
+        override def invalidateAll(): Unit = ()
+      })
+  }
+
+  /** The data schema of a table from the footers of `files` (one per
+    * snapshot is enough: a snapshot is written in one schema): columns in
+    * the order they first appear, all nullable, as every file source reads
+    * them. A type change fails loudly and names the column. */
+  private[graft] def dataSchema(conf: Configuration, table: String,
+      files: Seq[FileStatus]): StructType = {
+    val fields = scala.collection.mutable.LinkedHashMap.empty[String, StructField]
+    for (f <- files; sf <- footerSchema(conf, f).fields)
+      fields.get(sf.name) match {
+        case None => fields(sf.name) = sf
+        case Some(seen) => require(seen.dataType == sf.dataType,
+          s"$table: column ${sf.name} is ${seen.dataType} in one snapshot and " +
+            s"${sf.dataType} in ${f.getPath}; type-changing schema evolution is unsupported")
+      }
+    GraftExprBridge.asNullable(StructType(fields.values.toSeq))
   }
 
   /** The parquet files of each batch dir, sorted by path; a batch without a
@@ -346,21 +362,29 @@ object IngestJob {
   private[graft] def batchFiles(conf: Configuration, tableDir: String,
       batches: Seq[Long]): Seq[(Path, Array[FileStatus])] = {
     val fs = new Path(tableDir).getFileSystem(conf)
+    batches.map { b =>
+      val dir = fs.makeQualified(new Path(s"$tableDir/data/batch=$b"))
+      dir -> (try parquetFiles(fs, dir)
+        catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] })
+    }
+  }
+
+  /** The data files under `dir`, at any depth, sorted by path. */
+  private[graft] def parquetFiles(fs: FileSystem, dir: Path): Array[FileStatus] = {
     def leaves(p: Path): Array[FileStatus] = fs.listStatus(p).flatMap { st =>
       val name = st.getPath.getName
       if (st.isDirectory) leaves(st.getPath)
       else if (name.endsWith(".parquet") && !name.startsWith(".") && !name.startsWith("_")) Array(st)
       else Array.empty[FileStatus]
     }
-    batches.map { b =>
-      val dir = fs.makeQualified(new Path(s"$tableDir/data/batch=$b"))
-      dir -> (try leaves(dir).sortBy(_.getPath.toString)
-        catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] })
-    }
+    leaves(dir).sortBy(_.getPath.toString)
   }
 
-  /** The Spark row schema Spark's parquet writer stores in every footer
-    * (the parquet schema's conversion for a file another writer made). */
+  /** The Spark row schema Spark's parquet writer stores in every footer.
+    * For another writer's file, the parquet schema's conversion with INT64
+    * timestamps read as TIMESTAMP in every session (Engine's
+    * `inferTimestampNTZ=false`); TIMESTAMP(NANOS) has no Spark type, so
+    * such a column fails here ([[graft.Tables.t]] truncates it to µs). */
   private def footerSchema(conf: Configuration, f: FileStatus): StructType = {
     val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf), HadoopReadOptions
       .builder(conf).withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
@@ -368,7 +392,18 @@ object IngestJob {
       val meta = r.getFooter.getFileMetaData
       Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
         .map(DataType.fromJson(_).asInstanceOf[StructType])
-        .getOrElse(new ParquetToSparkSchemaConverter(SQLConf.get).convert(meta.getSchema))
+        .getOrElse {
+          import scala.jdk.CollectionConverters._
+          meta.getSchema.getColumns.asScala.find(_.getPrimitiveType.getLogicalTypeAnnotation match {
+            case ts: TimestampLogicalTypeAnnotation => ts.getUnit == TimeUnit.NANOS
+            case _ => false
+          }).foreach(c => throw new IllegalArgumentException(
+            s"${f.getPath}: column ${c.getPath.mkString(".")} is TIMESTAMP(NANOS), which " +
+              "Spark's parquet reader cannot read as a timestamp; read it through graft.Tables.t"))
+          val sql = SQLConf.get.clone()
+          sql.setConfString("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+          new ParquetToSparkSchemaConverter(sql).convert(meta.getSchema)
+        }
     } finally r.close()
   }
 

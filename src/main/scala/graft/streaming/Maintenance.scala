@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Table maintenance for the ingest table: small-file compaction, snapshot
   * expiry, and MERGE (the roles Iceberg's `rewrite_data_files` /
@@ -122,15 +123,6 @@ object Maintenance {
     }
   }
 
-  /** (snapshot id, batches it replaced) in append order — the compatibility
-    * face of [[commits]] used by as-of replay. */
-  def lineage(tableDir: String): Seq[(Long, Seq[Long])] =
-    commits(tableDir).map(c => c.id -> c.compacts)
-
-  /** compaction/merge snapshot id → the batch ids whose data it replaced. */
-  def compactionLog(tableDir: String): Map[Long, Seq[Long]] =
-    commits(tableDir).filter(_.compacts.nonEmpty).map(c => c.id -> c.compacts).toMap
-
   /** Batch ids replaced by some committed compaction/merge. */
   def replacedBatches(tableDir: String): Set[Long] =
     commits(tableDir).flatMap(_.compacts).toSet
@@ -175,16 +167,24 @@ object Maintenance {
       var cur = rows.join(seqDf, rows("batch").cast("long") === seqDf("_delbatch"), "left")
         .drop("_delbatch")
       for ((keyCol, group) <- dels.groupBy(_._3)) {
-        val delDf = group.map { case (seq, id, _) =>
-          spark.read.parquet(s"$tableDir/_deletes/$id")
-            .select(col(keyCol).as("_delkey"), lit(seq).as("_delseq"))
-        }.reduce(_ unionByName _)
+        val delDf = deleteKeys(spark, tableDir, rows.schema(keyCol), group)
         cur = cur.join(broadcast(delDf),
           cur(keyCol) === delDf("_delkey") && cur("_seq") < delDf("_delseq"), "left_anti")
       }
       cur.drop("_seq")
     }
   }
+
+  /** The keys of the live delete files `group` (all on column `key`) as
+    * (`_delkey`, `_delseq` = the delete's lineage position). Each delete
+    * file is read with the key's field from the table schema, so no
+    * schema-inference job fires. */
+  private def deleteKeys(spark: SparkSession, tableDir: String, key: StructField,
+      group: Seq[(Int, Long, String)]): DataFrame =
+    group.map { case (seq, id, _) =>
+      spark.read.schema(StructType(Seq(key))).parquet(s"$tableDir/_deletes/$id")
+        .select(col(key.name).as("_delkey"), lit(seq).as("_delseq"))
+    }.reduce(_ unionByName _)
 
   private def dirSize(p: java.nio.file.Path): Long = {
     if (!Files.exists(p)) 0L
@@ -441,10 +441,7 @@ object Maintenance {
       var probe = raw.join(seqDf, raw("batch").cast("long") === seqDf("_delbatch"), "left")
         .drop("_delbatch")
       val hits = dels.groupBy(_._3).map { case (keyCol, group) =>
-        val delDf = group.map { case (seq, id, _) =>
-          spark.read.parquet(s"$tableDir/_deletes/$id")
-            .select(col(keyCol).as("_delkey"), lit(seq).as("_delseq"))
-        }.reduce(_ unionByName _)
+        val delDf = deleteKeys(spark, tableDir, raw.schema(keyCol), group)
         probe.join(broadcast(delDf),
             probe(keyCol) === delDf("_delkey") && probe("_seq") < delDf("_delseq"), "left_semi")
           .select(col("batch").cast("long")).distinct()

@@ -69,7 +69,7 @@ class BenchmarkSpec extends SparkSpec {
     BenchmarkQueries.catalogSql("sf0001").foreach { case (name, sql) =>
       val viaCat = s.sql(sql)
       val plan = viaCat.queryExecution.executedPlan.toString
-      assert(plan.contains("GraftScan"), s"$name must scan through the connector: $plan")
+      assert(plan.contains("BatchScan graft:"), s"$name must scan through the connector: $plan")
       // the date/segment predicates reach the connector scan as pushed
       // filters on AT LEAST one scan (a multi-scan subquery plan may also
       // carry scans with nothing pushable, e.g. q48's semi-join probe side)

@@ -204,6 +204,25 @@ class MaintenanceSpec extends SparkSpec {
     assert(Maintenance.rewriteDeletes(spark, table).isEmpty)
   }
 
+  test("readTable of a table with a live MOR delete fires no Spark job before the scan") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val work = tmpDir("graft-mor-jobs")
+    ingestOnce(work, 50, seed = 12)
+    val table = s"$work/table"
+    val updates = IngestJob.readTable(spark, table).orderBy("trade_id").limit(2)
+      .withColumn("price", lit(9999.0))
+    Maintenance.mergeIntoMor(spark, table, updates, "trade_id", "ts_event")
+    assert(Maintenance.liveDeletes(Maintenance.commits(table)).size == 1)
+    val (read, jobs) = jobsDuring {
+      val t = IngestJob.readTable(spark, table)
+      t.queryExecution.executedPlan // resolved and planned, not run
+      t
+    }
+    assert(jobs == 0)
+    assert(read.count() == 50L)
+    assert(read.filter(col("price") === 9999.0).count() == 2L)
+  }
+
   test("optimistic concurrency: a commit racing the merge aborts the attempt and retries") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit, udf}

@@ -174,25 +174,127 @@ class SourcesSpec extends SparkSpec {
     assert(viaConn.count() == viaHelper.count())
   }
 
-  test("graft: q-suite table loads route through the connector under tableSource=graft") {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set("spark.graft.tableSource", "graft")
-    s.conf.set("spark.graft.tableCache", "off") // fresh resolution, no cross-mode cache
-    val viaConn = operators.CoreQueries.q03(s, sf).collect().map(_.toString).toSeq
-    val plan = Tables.t(s, sf, "lineitem").queryExecution.executedPlan.toString
-    assert(plan.contains("GraftScan"), "tableSource=graft must route through the connector: " + plan)
-    val plain = operators.CoreQueries.q03(spark, sf).collect().map(_.toString).toSeq
-    assert(viaConn == plain)
+  /** A committed snapshot table `<ns>/trades` of 40 batch dirs: 0-19
+    * written before a `venue` column existed, 20-39 with it. Returns the
+    * table dir and the number of rows written without `venue`. */
+  private def evolvedTable(ns: String): (String, Long) = {
+    val table = s"$ns/trades"
+    val trades = streaming.TradeGen.trades(spark, 400L, seed = 7L)
+      .withColumn("batch", pmod(hash(col("trade_id")), lit(40)))
+      .withColumn("p_date", to_date(col("ts_event")))
+    val v1 = trades.filter(col("batch") < 20)
+    v1.write.partitionBy("batch", "p_date").parquet(s"$table/data")
+    trades.filter(col("batch") >= 20).withColumn("venue", lit("XNAS"))
+      .write.mode("append").partitionBy("batch", "p_date").parquet(s"$table/data")
+    Files.writeString(Paths.get(s"$table/_snapshots.jsonl"),
+      (0 until 40).map(b => s"""{"batch":$b,"rows":10,"rejects":0,"committed":true}\n""").mkString)
+    (table, v1.count())
   }
 
-  /** A fresh session with the named catalog registered (catalog confs are
-    * runtime-resolvable — Engine sets the same ones at build time). */
-  private def catalogSession() = {
+  test("graft: a schema-evolved snapshot table reads like readTable through format and catalog") {
+    val root = tmpDir("graft-evolved")
+    val (table, v1Rows) = evolvedTable(s"$root/ev")
+    val want = streaming.IngestJob.readTable(spark, table)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for (got <- Seq(spark.read.format("graft").load(table),
+        catalogOver(root).sql("SELECT * FROM graft.ev.trades"))) {
+      assert(got.schema == want.schema, got.schema.treeString)
+      assert(got.columns.last == "venue")
+      assert(rows(got) == rows(want))
+      assert(got.filter(col("venue").isNull).count() == v1Rows && v1Rows > 0)
+    }
+  }
+
+  test("graft: a snapshot table of 40 batch dirs resolves with no Spark job before the scan") {
+    val root = tmpDir("graft-40")
+    val (table, _) = evolvedTable(s"$root/ev")
+    assert(new java.io.File(s"$table/data").list().count(_.startsWith("batch=")) > 32)
+    val s = catalogOver(root)
+    val (dfs, jobs) = jobsDuring {
+      val dfs = Seq(spark.read.format("graft").load(table), s.sql("SELECT * FROM graft.ev.trades"))
+      dfs.foreach(_.queryExecution.executedPlan) // resolved and planned, not run
+      dfs
+    }
+    assert(jobs == 0)
+    dfs.foreach { df =>
+      assert(df.queryExecution.executedPlan.toString.contains("BatchScan graft:"))
+      assert(df.count() == 400L)
+    }
+  }
+
+  test("graft: a load after a commit reads the new snapshot, not a cached earlier load") {
+    import spark.implicits._
+    val table = s"${tmpDir("graft-fresh")}/t"
+    Seq((1L, 1.5)).toDF("id", "price").write.parquet(s"$table/data/batch=0/p_date=2024-01-01")
+    writeLog(table, Seq("""{"batch":0,"committed":true}"""))
+    val first = spark.read.format("graft").load(table)
+    val cached = spark.read.format("graft").load(table).cache()
+    try {
+      assert(first.count() == 1L && cached.count() == 1L)
+      Seq((2L, 2.5)).toDF("id", "price").write.parquet(s"$table/data/batch=1/p_date=2024-01-01")
+      writeLog(table, Seq("""{"batch":0,"committed":true}""", """{"batch":1,"committed":true}"""))
+      assert(first.count() == 1L, "a relation keeps the files it resolved")
+      assert(spark.read.format("graft").load(table).count() == 2L)
+    } finally cached.unpersist()
+  }
+
+  test("graft: INSERT through the catalog and writes through the connector refuse and write nothing") {
+    val root = tmpDir("graft-insert")
+    val (table, _) = evolvedTable(s"$root/ev")
+    def listing = Files.walk(Paths.get(table)).toArray.map(_.toString).sorted.toSeq
+    val before = listing
+    for (insert <- Seq("INSERT INTO", "INSERT OVERWRITE")) {
+      val e = intercept[Exception](
+        catalogOver(root).sql(s"$insert graft.ev.trades SELECT * FROM graft.ev.trades"))
+      assert(e.getMessage.contains("does not support"), e.getMessage)
+    }
+    assert(listing == before)
+    val e = intercept[Exception](
+      spark.read.format("graft").load(table).write.format("graft").mode("append").save(table))
+    assert(listing == before, e.getMessage)
+  }
+
+  test("graft: a type-changing evolution fails at resolve and names the column") {
+    import spark.implicits._
+    val table = s"${tmpDir("graft-typechange")}/t"
+    Seq((1L, 1.5)).toDF("id", "price").write.parquet(s"$table/data/batch=0/p_date=2024-01-01")
+    Seq((2L, "x")).toDF("id", "price").write.parquet(s"$table/data/batch=1/p_date=2024-01-01")
+    writeLog(table, Seq("""{"batch":0,"committed":true}""", """{"batch":1,"committed":true}"""))
+    val e = intercept[IllegalArgumentException](spark.read.format("graft").load(table))
+    assert(e.getMessage.contains("column price"), e.getMessage)
+  }
+
+  test("graft: a TIMESTAMP(NANOS) column fails at resolve, naming the column and Tables.t") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val file = s"${tmpDir("graft-nanos")}/events.parquet"
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 id; required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val out = HadoopOutputFile.fromPath(
+      new org.apache.hadoop.fs.Path(file), spark.sparkContext.hadoopConfiguration)
+    val w = ExampleParquetWriter.builder(out).withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("id", 1L).append("ts", 1700000000000000123L))
+    finally w.close()
+    val e = intercept[IllegalArgumentException](spark.read.format("graft").load(file))
+    assert(e.getMessage.contains("column ts") && e.getMessage.contains("Tables.t"), e.getMessage)
+  }
+
+  /** A fresh session whose `graft` catalog is rooted at `root` (catalog
+    * confs are runtime-resolvable — Engine sets the same ones at build time). */
+  private def catalogOver(root: String) = {
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "4")
     s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.root", "/root/testdata")
+    s.conf.set("spark.sql.catalog.graft.root", root)
+    s
+  }
+
+  /** The catalog over the testdata, with an alias for the dotted sf0.001. */
+  private def catalogSession() = {
+    val s = catalogOver(new java.io.File(sf).getParent)
     s.conf.set("spark.sql.catalog.graft.ns.sf0001", "sf0.001")
     s
   }
@@ -202,7 +304,7 @@ class SourcesSpec extends SparkSpec {
     val df = s.sql(
       "SELECT l_orderkey, l_quantity FROM graft.sf0001.lineitem WHERE l_quantity > 49.0")
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("GraftScan"), "catalog must route through the connector: " + plan)
+    assert(plan.contains("BatchScan graft:"), "catalog must route through the connector: " + plan)
     assert(plan.contains("ReadSchema: struct<l_orderkey:bigint,l_quantity:double>"), plan)
     assert(plan.contains("GreaterThan(l_quantity,49.0)"), plan)
     val expected = spark.read.parquet(s"$sf/lineitem.parquet")
