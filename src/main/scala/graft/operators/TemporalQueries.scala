@@ -607,12 +607,12 @@ object TemporalQueries {
   val x131: Q = (s, d) => {
     val ev = t(s, d, "events")
     val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("ts").as("pts"), col("event_id").as("pid"))
+      .select(col("user_id"), col("ts").as("pts"), col("event_id").as("pid")).as("p")
     val touches = ev.filter(col("event_type").isin("view", "click"))
       .select(col("user_id"), col("ts").as("tts"), col("event_type").as("ttype"),
-        col("event_id").as("tid"))
+        col("event_id").as("tid")).as("t")
     val joined = purchases.join(touches,
-        purchases("user_id") === touches("user_id") &&
+        col("p.user_id") === col("t.user_id") &&
           col("tts") <= col("pts") &&
           col("tts") > col("pts") - expr("INTERVAL 24 HOURS"), "left")
       .select(col("pid"), col("ttype"), col("tts"), col("tid"))

@@ -13,6 +13,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.streaming.{CommitLog, Maintenance}
+
 /** DataSource V2 connector for the snapshot-table commit log — the
   * engine's equivalent of Iceberg's `db.table.snapshots` metadata table
   * (`/root/reference/duckdb/init.sql:22-32` attaches the catalog whose
@@ -103,9 +105,8 @@ case class CommitLogOffset(pos: Int) extends Offset {
 
 class CommitLogMicroBatchStream(path: String, fields: Array[String])
     extends MicroBatchStream {
-  import graft.streaming.Maintenance
   override def latestOffset(): Offset =
-    CommitLogOffset(Maintenance.commits(path).length)
+    CommitLogOffset(CommitLog.commits(path).length)
   override def initialOffset(): Offset = CommitLogOffset(0)
   override def deserializeOffset(json: String): Offset =
     CommitLogOffset(json.trim.toInt)
@@ -129,21 +130,19 @@ class CommitLogReaderFactory(fields: Array[String])
 }
 
 /** Parses the commit log and projects commits [from, until) onto the
-  * pruned schema. Visibility replays the lineage fold over the WHOLE log
-  * read at scan time (vis −compacts +id per commit) — the same rule
-  * `Maintenance.visibleBatches` applies; in the streaming form this means
-  * each emitted commit carries visibility AS OF its micro-batch, the
-  * semantics a metadata CDC consumer wants. The fold is bounded at `hi`
-  * (the batch end offset), NOT the log length at read time: a batch
-  * [s,e) replayed from a checkpoint after later commits landed must emit
-  * the same rows as the original run (exactly-once replay determinism). */
+  * pruned schema. Visibility is `CommitLog.visibleIn` over the log prefix
+  * up to `hi` — the rule every table read applies; in the streaming form
+  * this means each emitted commit carries visibility AS OF its
+  * micro-batch, the semantics a metadata CDC consumer wants. The fold is
+  * bounded at `hi` (the batch end offset), NOT the log length at read
+  * time: a batch [s,e) replayed from a checkpoint after later commits
+  * landed must emit the same rows as the original run (exactly-once replay
+  * determinism). */
 class CommitLogReader(path: String, from: Int, until: Int, fields: Array[String])
     extends PartitionReader[InternalRow] {
-  import graft.streaming.Maintenance
-  private val commits = Maintenance.commits(path)
+  private val commits = CommitLog.commits(path)
   private val hi = if (until < 0) commits.length else math.min(until, commits.length)
-  private val visible: Set[Long] =
-    commits.take(hi).foldLeft(Set.empty[Long]) { case (vis, c) => vis -- c.compacts + c.id }
+  private val visible: Set[Long] = CommitLog.visibleIn(commits.take(hi)).toSet
   private var i = from - 1
 
   override def next(): Boolean = { i += 1; i < hi }

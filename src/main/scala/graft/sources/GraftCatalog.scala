@@ -10,6 +10,8 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
+import graft.streaming.CommitLog
+
 /** Session-level named catalog over the engine's DSv2 data connector —
   * the three-part-name SQL surface (`SELECT … FROM graft.sf01.lineitem`)
   * and the connector ([[GraftDataSource]]) as ONE path:
@@ -23,12 +25,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Layout contract: a NAMESPACE is a directory under `root`; a TABLE is
   * either `<ns>/<name>.parquet` (file or directory — the testdata layout)
-  * or `<ns>/<name>/` with a `_snapshots.jsonl` commit log (an ingested
-  * snapshot table — resolved through `Maintenance.visibleBatches`, MOR
-  * refusal included, exactly like `spark.read.format("graft")`). Because
-  * directory names may contain dots (`sf0.01`) — which SQL identifiers
-  * can't carry unquoted — `ns.<alias>=<dir>` options register namespace
-  * aliases; the literal (backquoted) directory name always works too.
+  * or `<ns>/<name>/` holding a commit log (an ingested snapshot table,
+  * `graft.streaming.CommitLog.isTable` — resolved through its visible
+  * batches, MOR refusal included, exactly like `spark.read.format("graft")`).
+  * Because directory names may contain dots (`sf0.01`) — which SQL
+  * identifiers can't carry unquoted — `ns.<alias>=<dir>` options register
+  * namespace aliases; the literal (backquoted) directory name always works
+  * too.
   *
   * The catalog is READ-ONLY by design (the write path is the streaming
   * ingest + snapshot commit protocol, IngestJob — not SQL DDL): every
@@ -73,9 +76,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   private def tablePath(ident: Identifier): Option[String] = {
     val d = dirOf(ident.namespace())
     val plain = new java.io.File(d, ident.name() + ".parquet")
-    val snap = new java.io.File(d, ident.name())
+    val snap = new java.io.File(d, ident.name()).getPath
     if (plain.exists) Some(plain.getPath)
-    else if (new java.io.File(snap, "_snapshots.jsonl").exists) Some(snap.getPath)
+    else if (CommitLog.isTable(snap)) Some(snap)
     else None
   }
 
@@ -92,7 +95,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     d.listFiles.toSeq.sortBy(_.getName).flatMap { f =>
       if (f.getName.endsWith(".parquet"))
         Some(Identifier.of(namespace, f.getName.stripSuffix(".parquet")))
-      else if (new java.io.File(f, "_snapshots.jsonl").exists)
+      else if (CommitLog.isTable(f.getPath))
         Some(Identifier.of(namespace, f.getName))
       else None
     }.toArray
@@ -102,7 +105,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
   private def subdirs(d: java.io.File): Array[Array[String]] =
     if (!d.isDirectory) Array.empty
     else d.listFiles.filter(f => f.isDirectory &&
-        !new java.io.File(f, "_snapshots.jsonl").exists && !f.getName.endsWith(".parquet"))
+        !CommitLog.isTable(f.getPath) && !f.getName.endsWith(".parquet"))
       .map(_.getName).sorted.map(Array(_))
 
   override def listNamespaces(): Array[Array[String]] = subdirs(root)

@@ -15,7 +15,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.streaming.{IngestJob, Maintenance}
+import graft.streaming.{CommitLog, IngestJob}
 
 /** DataSource V2 connector for the DATA side of the engine's tables — the
   * companion of [[CommitLogSource]] (which serves the metadata side):
@@ -26,8 +26,8 @@ import graft.streaming.{IngestJob, Maintenance}
   *
   * `path` is either a plain parquet file/directory (the testdata layout,
   * `dir/name.parquet`) or an ingested snapshot table directory (the
-  * `_snapshots.jsonl` + `data/batch=<id>/` mini-catalog layout,
-  * `IngestJob.commitSnapshot`): for a snapshot table the connector resolves
+  * commit-log layout `graft.streaming.CommitLog` owns): for a snapshot
+  * table the connector resolves
   * CURRENTLY VISIBLE batches through the commit log — committed minus
   * compacted-away, in lineage order — exactly like `IngestJob.readTable`.
   * Tables with live un-rewritten MOR equality-deletes refuse loudly
@@ -79,16 +79,18 @@ object GraftDataSource {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(path)
     val fs = root.getFileSystem(conf)
+    // the commit log is a local file: a `file:` URI names it by its path
+    val local = if (fs.getScheme == "file") Path.getPathWithoutSchemeAndAuthority(root).toString else path
     val groups: Seq[Array[FileStatus]] =
-      if (fs.exists(new Path(root, "_snapshots.jsonl"))) {
-        val cms = Maintenance.commits(path)
-        val live = Maintenance.liveDeletes(cms)
+      if (CommitLog.isTable(local)) {
+        val cms = CommitLog.commits(local)
+        val live = CommitLog.liveDeletes(cms)
         require(live.isEmpty,
           s"graft: $path has live equality-delete files (snapshots " +
             s"${live.map(_._2).mkString(",")}); the data connector cannot apply " +
             "MOR deletes — run Maintenance.rewriteDeletes/compact first or read " +
             "via IngestJob.readTable")
-        IngestJob.batchFiles(conf, path, Maintenance.visibleIn(cms)).map(_._2)
+        IngestJob.batchFiles(conf, local, CommitLog.visibleIn(cms)).map(_._2)
       } else {
         val st = fs.getFileStatus(root)
         Seq(if (st.isDirectory) IngestJob.parquetFiles(fs, st.getPath) else Array(st))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
@@ -8,12 +8,12 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
-import org.apache.spark.sql.{DataFrame, GraftExprBridge, Observation, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftExprBridge, Observation, Row, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{DataType, DateType, LongType, StructField, StructType}
 
 /** A3 — the continuous JSON→columnar ingest operator (the role Redpanda's
@@ -21,14 +21,17 @@ import org.apache.spark.sql.types.{DataType, DateType, LongType, StructField, St
   * schema, flatten to columns, write parquet, commit a snapshot every
   * `iceberg_target_lag_ms` — `redpanda/redpanda.yaml:1-12`, `CLAUDE.md:160-177`).
   *
-  * Spark-first shape: readStream(topic) → from_json → required-field filter →
-  * foreachBatch { date-partitioned parquet append + snapshot-log commit }.
-  * Each trigger is one scan of its topic batch and one Spark job: the
-  * committed row and reject counts are an [[Observation]] on the write.
+  * Spark-first shape: readStream(topic) → foreachBatch { decode →
+  * required-field filter → date-partitioned parquet append + commit-log
+  * append }, one driver ([[drive]]) for all topic modes; a mode supplies
+  * only its decode and partition column. Each trigger is one scan of its
+  * topic batch and one Spark job: the committed row and reject counts are
+  * an [[Observation]] on the write.
   *
   *  - Exactly-once: foreachBatch is wrapped in a batchId check against the
-  *    snapshot log (the reference gets this from Iceberg's atomic commit,
-  *    `README.md:752-757`); a replayed batch after restart is skipped.
+  *    commit log ([[CommitLog]]; the reference gets this from Iceberg's
+  *    atomic commit, `README.md:752-757`); a replayed batch after restart
+  *    is skipped.
   *  - Schema enforcement (A7): rows whose JSON fails to parse or misses a
   *    required field are diverted to a reject count, not dropped silently
   *    (the registry's "schema must exist before data" contract,
@@ -42,26 +45,14 @@ import org.apache.spark.sql.types.{DataType, DateType, LongType, StructField, St
   *    footer per batch, so resolving a table fires no Spark job.
   */
 object IngestJob {
-  /** Snapshot-log line: our mini-Iceberg commit record. Appends under the
-    * shared [[CommitLock]] so a maintenance writer's compare-and-append
-    * (Maintenance.commitIfUnmoved) can never interleave with this append —
-    * the ingest-races-merge window is closed, not merely narrowed. */
-  private def commitSnapshot(tableDir: String, batchId: Long, rows: Long, rejects: Long): Unit =
-    CommitLock.withLogLock(tableDir) {
-      val log = Paths.get(tableDir, "_snapshots.jsonl")
-      val line = s"""{"batch":$batchId,"rows":$rows,"rejects":$rejects,"committed":true}""" + "\n"
-      Files.write(log, line.getBytes, StandardOpenOption.CREATE, StandardOpenOption.APPEND)
-    }
+  /** Parquet file size cap of the ingest writer (D2 flush-threshold analog:
+    * redpanda.yaml:31-32 caps Parquet file size by bytes; Spark's file sink
+    * caps by records). */
+  private val MaxRecordsPerFile = 1000000L
 
-  def committedBatches(tableDir: String): Set[Long] = {
-    val log = Paths.get(tableDir, "_snapshots.jsonl")
-    if (!Files.exists(log)) Set.empty
-    else {
-      import scala.jdk.CollectionConverters._
-      Files.readAllLines(log).asScala
-        .flatMap(l => "\"batch\":(\\d+)".r.findFirstMatchIn(l).map(_.group(1).toLong)).toSet
-    }
-  }
+  /** Every snapshot id of the table's commit log: the exactly-once guard. */
+  def committedBatches(tableDir: String): Set[Long] =
+    CommitLog.commits(tableDir).map(_.id).toSet
 
   /** Start the ingest stream: topic → parquet table at tableDir.
     * @param required names that must be non-null post-parse (A7 enforcement)
@@ -75,21 +66,9 @@ object IngestJob {
       required: Seq[String],
       tsCol: String,
       checkpointDir: String,
-      trigger: Trigger = Trigger.ProcessingTime("10 seconds")) = {
-    val parsed = source.readStream(spark)
-      .select(col("key"), from_json(col("value"), schema).as("data"))
-      .select(col("key"), col("data.*"))
-    parsed.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!committedBatches(tableDir).contains(batchId))
-          writeBatch(batch, tableDir, batchId, required, tsCol)
-        ()
-      }
-      .start()
-  }
+      trigger: Trigger = Trigger.ProcessingTime("10 seconds")) =
+    drive(spark, source, tableDir, checkpointDir, trigger, required, to_date(col(tsCol)))(
+      parseJson(_, schema))
 
   /** A7 complete — registry-backed ingest (`value_schema_latest`,
     * CLAUDE.md:165-171): the stream carries the raw envelope and each
@@ -110,21 +89,8 @@ object IngestJob {
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds")) = {
     registry.latestOrThrow(subject) // schema-before-data
-    source.readStream(spark).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!committedBatches(tableDir).contains(batchId)) {
-          val (_, schema) = registry.latestOrThrow(subject)
-          val parsed = batch
-            .select(col("key"), from_json(col("value"), schema).as("data"))
-            .select(col("key"), col("data.*"))
-          writeBatch(parsed, tableDir, batchId, required, tsCol)
-        }
-        ()
-      }
-      .start()
+    drive(spark, source, tableDir, checkpointDir, trigger, required, to_date(col(tsCol)))(
+      batch => parseJson(batch, registry.latestOrThrow(subject)._2))
   }
 
   /** `key_value` topic mode (CLAUDE.md:165-171): NO decode — the raw
@@ -141,21 +107,8 @@ object IngestJob {
       tableDir: String,
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds")) =
-    source.readStream(spark).writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!committedBatches(tableDir).contains(batchId)) {
-          val raw = batch.select(
-            col("key").cast("binary").as("key"),
-            col("value").cast("binary").as("value"))
-          writeBatch(raw, tableDir, batchId, Seq("value"), current_date(),
-            keepKey = true)
-        }
-        ()
-      }
-      .start()
+    drive(spark, source, tableDir, checkpointDir, trigger, Seq("value"), current_date())(
+      _.select(col("key").cast("binary").as("key"), col("value").cast("binary").as("value")))
 
   /** `value_schema_id_prefix` topic mode (CLAUDE.md:165-171): each value is
     * magic 0x00 + 4-byte schema id + Avro binary, decoded per batch through
@@ -183,20 +136,30 @@ object IngestJob {
       checkpointDir: String,
       trigger: Trigger = Trigger.ProcessingTime("10 seconds")) = {
     registry.latestOrThrow(subject) // schema-before-data
+    drive(spark, source, tableDir, checkpointDir, trigger, required, to_date(col(tsCol)))(
+      decodeAvroBatch(_, registry, subject).drop("key"))
+  }
+
+  /** The data columns of a JSON-valued batch under `schema`. */
+  private def parseJson(batch: DataFrame, schema: StructType): DataFrame =
+    batch.select(from_json(col("value"), schema).as("data")).select(col("data.*"))
+
+  /** The one ingest stream every topic mode runs: each micro-batch whose id
+    * the commit log does not hold yet is decoded by `decode` and written by
+    * [[writeBatch]]; a replayed batch is skipped. */
+  private def drive(spark: SparkSession, source: TopicSource, tableDir: String,
+      checkpointDir: String, trigger: Trigger, required: Seq[String], partCol: Column)(
+      decode: DataFrame => DataFrame): StreamingQuery =
     source.readStream(spark).writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!committedBatches(tableDir).contains(batchId)) {
-          val parsed = decodeAvroBatch(batch, registry, subject)
-          writeBatch(parsed, tableDir, batchId, required,
-            to_date(col(tsCol)))
-        }
+        if (!committedBatches(tableDir).contains(batchId))
+          writeBatch(decode(batch), tableDir, batchId, required, partCol)
         ()
       }
       .start()
-  }
 
   /** Decode one micro-batch of (key, base64-or-binary value) rows under the
     * registry's schemas. Exposed for tests; the streaming path calls it per
@@ -245,27 +208,19 @@ object IngestJob {
     }(enc)
   }
 
-  /** The idempotent per-batch table write + snapshot commit, shared by the
-    * fixed-schema and registry-backed ingest paths. `partCol` is the
-    * partition-date expression (event date for decoded modes, processing
-    * date for key_value); `keepKey` retains the topic key column
-    * (key_value's whole point; decoded modes drop it). */
+  /** The idempotent per-batch table write + snapshot commit: rows missing a
+    * `required` column are counted as rejects, the rest are written under
+    * `batch=<batchId>`, partitioned by `partCol` (event date for decoded
+    * modes, processing date for key_value). */
   private def writeBatch(
       batch: DataFrame, tableDir: String, batchId: Long,
-      required: Seq[String], tsCol: String): Unit =
-    writeBatch(batch, tableDir, batchId, required, to_date(col(tsCol)))
-
-  private def writeBatch(
-      batch: DataFrame, tableDir: String, batchId: Long,
-      required: Seq[String], partCol: org.apache.spark.sql.Column,
-      keepKey: Boolean = false): Unit = {
+      required: Seq[String], partCol: Column): Unit = {
     val ok = required.map(col(_).isNotNull).reduceOption(_ && _).getOrElse(lit(true))
     // both counts ride the write's own scan: observed on the unfiltered
     // batch, so the topic batch is read once, by one job
     val counts = Observation()
-    val good = batch.observe(counts, count(lit(1)).as("all"), count(when(ok, 1)).as("good"))
+    batch.observe(counts, count(lit(1)).as("all"), count(when(ok, 1)).as("good"))
       .filter(ok).withColumn("p_date", partCol)
-    (if (keepKey) good else good.drop("key"))
       // OVERWRITE of this batch's directory, not append: a replay
       // after a crash between data write and snapshot commit rewrites
       // the same files instead of duplicating them — the write is
@@ -273,15 +228,13 @@ object IngestJob {
       // exactly-once, and readTable filters to committed batches so
       // a torn write is never visible
       .write.mode("overwrite").partitionBy("p_date")
-      // D2 flush-threshold analog (redpanda.yaml:31-32 caps Parquet
-      // file size by bytes; Spark's file sink caps by records)
-      .option("maxRecordsPerFile", sys.env.getOrElse("GRAFT_MAX_RECORDS_PER_FILE", "1000000"))
+      .option("maxRecordsPerFile", MaxRecordsPerFile)
       // batch=<id> directory = the snapshot boundary: time-travel
       // reads prune on it (Iceberg's VERSION AS OF equivalent)
-      .parquet(s"$tableDir/data/batch=$batchId")
+      .parquet(CommitLog.batchDir(tableDir, batchId))
     val m = counts.get
     val (nAll, nGood) = (m("all").asInstanceOf[Long], m("good").asInstanceOf[Long])
-    commitSnapshot(tableDir, batchId, nGood, nAll - nGood)
+    CommitLog.append(tableDir, CommitLog.Commit(batchId, nGood, nAll - nGood))
   }
 
   /** Read the ingested table at its current snapshot (A4 scan stand-in —
@@ -295,9 +248,9 @@ object IngestJob {
     // small snapshots into one and records what it replaced); live
     // equality-delete files (merge-on-read MERGE) are applied on top — a
     // no-op unless an un-rewritten MOR merge exists.
-    val cms = Maintenance.commits(tableDir)
+    val cms = CommitLog.commits(tableDir)
     Maintenance.applyDeletes(spark, tableDir,
-      readBatches(spark, tableDir, Maintenance.visibleIn(cms)), cms)
+      readBatches(spark, tableDir, CommitLog.visibleIn(cms)), cms)
       .drop("p_date").drop("batch")
   }
 
@@ -321,7 +274,7 @@ object IngestJob {
     if (listed.forall(_._2.isEmpty))
       spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     else {
-      val index = fixedIndex(spark, listed, Map("basePath" -> s"$tableDir/data"), schema)
+      val index = fixedIndex(spark, listed, Map("basePath" -> CommitLog.dataDir(tableDir)), schema)
       spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema, data,
         None, new ParquetFileFormat, Map.empty)(spark))
     }
@@ -363,7 +316,7 @@ object IngestJob {
       batches: Seq[Long]): Seq[(Path, Array[FileStatus])] = {
     val fs = new Path(tableDir).getFileSystem(conf)
     batches.map { b =>
-      val dir = fs.makeQualified(new Path(s"$tableDir/data/batch=$b"))
+      val dir = fs.makeQualified(new Path(CommitLog.batchDir(tableDir, b)))
       dir -> (try parquetFiles(fs, dir)
         catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] })
     }
@@ -417,16 +370,20 @@ object IngestJob {
     // consolidated batch and retires the ones it replaced. Ids are not
     // comparable across ingest/maintenance namespaces, so lineage position —
     // not id order — defines "as of" (Iceberg's snapshot-lineage contract).
-    val lin = Maintenance.commits(tableDir)
+    val lin = CommitLog.commits(tableDir)
     require(lin.exists(_.id == batchId),
       s"snapshot $batchId not in the commit log of $tableDir")
     val upTo = lin.take(lin.indexWhere(_.id == batchId) + 1)
-    val asOf = Maintenance.visibleIn(upTo)
+    val asOf = CommitLog.visibleIn(upTo)
     // expireSnapshots physically deletes replaced dirs but the log still
     // lists them; an as-of read spanning an expired snapshot must fail
     // loudly (Iceberg: "Cannot find snapshot"), not silently return the
-    // surviving subset of rows.
-    val expired = asOf.filterNot(b => Files.isDirectory(Paths.get(s"$tableDir/data/batch=$b")))
+    // surviving subset of rows. expireSnapshots deletes only snapshots the
+    // log says were replaced, so only those can be expired; any other
+    // commit without a data dir wrote none (a delete-only MOR commit).
+    val replaced = lin.flatMap(_.compacts).toSet
+    val expired = asOf.filter(b =>
+      replaced(b) && !Files.isDirectory(Paths.get(CommitLog.batchDir(tableDir, b))))
     require(expired.isEmpty,
       s"snapshot $batchId expired: data for batch(es) ${expired.sorted.mkString(",")} " +
         s"deleted by expireSnapshots; time travel to this version is no longer possible")

@@ -76,6 +76,30 @@ class MaintenanceSpec extends SparkSpec {
     assert(e.getMessage.contains("expired"))
   }
 
+  test("compaction reads its candidates in lineage order: a mid-schema column keeps its place") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, to_date}
+    val table = s"${tmpDir("graft-compact-order")}/table"
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    def commit(id: Long, df: DataFrame): Unit = {
+      df.withColumn("p_date", to_date(col("ts"))).write.partitionBy("p_date")
+        .parquet(CommitLog.batchDir(table, id))
+      CommitLog.append(table, CommitLog.Commit(id, df.count()))
+    }
+    commit(0L, Seq((1L, "c0", ts)).toDF("a", "c", "ts"))
+    commit(1L, Seq((2L, "c1", ts)).toDF("a", "c", "ts"))
+    assert(Maintenance.compact(spark, table).get.replaced == Seq(0L, 1L))
+    // a registry-compatible insert of `b` before `c`: readers place it last
+    commit(2L, Seq((3L, 30L, "c2", ts)).toDF("a", "b", "c", "ts"))
+    val cols = IngestJob.readTable(spark, table).columns.toSeq
+    assert(cols == Seq("a", "c", "ts", "b"))
+    val stats = Maintenance.compact(spark, table).get
+    assert(stats.replaced == Seq(2L, Maintenance.CompactionIdBase))
+    assert(IngestJob.readTable(spark, table).columns.toSeq == cols)
+    assert(IngestJob.readTable(spark, table).count() == 3L)
+  }
+
   test("mergeInto: copy-on-write upsert updates matched keys, inserts new ones") {
     import spark.implicits._
     val work = tmpDir("graft-merge")
@@ -196,12 +220,34 @@ class MaintenanceSpec extends SparkSpec {
     val rw = Maintenance.rewriteDeletes(spark, table).get
     assert(rw.replaced == Seq(0L))
     assert(rw.rowsRewritten == 48L)
-    assert(Maintenance.liveDeletes(Maintenance.commits(table)).isEmpty)
+    assert(CommitLog.liveDeletes(CommitLog.commits(table)).isEmpty)
     val folded = IngestJob.readTable(spark, table)
     assert(folded.count() == 102L)
     assert(folded.filter(col("price") === 9999.0).count() == 2L)
     // idempotent: no live deletes left
     assert(Maintenance.rewriteDeletes(spark, table).isEmpty)
+  }
+
+  test("time travel across a delete-only MOR commit: no snapshot reads as expired") {
+    import spark.implicits._
+    val work = tmpDir("graft-mor-tombstone")
+    ingestOnce(work, 50, seed = 14)
+    val table = s"$work/table"
+    val before = IngestJob.readTable(spark, table)
+    val keys = before.select("trade_id").orderBy("trade_id").as[String].take(2).toSeq
+    val tomb = Maintenance.mergeIntoMor(spark, table, before.limit(0), "trade_id", "ts_event",
+      tombstoneKeys = Some(keys.toDF("trade_id")))
+    assert(IngestJob.readTable(spark, table).count() == 48L)
+    ingestOnce(work, 30, seed = 15)
+    assert(IngestJob.readTable(spark, table).count() == 78L)
+    assert(IngestJob.readTableAsOf(spark, table, 0L).count() == 50L)
+    assert(IngestJob.readTableAsOf(spark, table, tomb.newBatch).count() == 48L)
+    assert(IngestJob.readTableAsOf(spark, table, 1L).count() == 78L)
+    // a compaction replaces the tombstone commit too; without an expiry
+    // every snapshot still resolves
+    assert(Maintenance.compact(spark, table).get.replaced.contains(tomb.newBatch))
+    assert(IngestJob.readTableAsOf(spark, table, tomb.newBatch).count() == 48L)
+    assert(IngestJob.readTable(spark, table).count() == 78L)
   }
 
   test("readTable of a table with a live MOR delete fires no Spark job before the scan") {
@@ -212,7 +258,7 @@ class MaintenanceSpec extends SparkSpec {
     val updates = IngestJob.readTable(spark, table).orderBy("trade_id").limit(2)
       .withColumn("price", lit(9999.0))
     Maintenance.mergeIntoMor(spark, table, updates, "trade_id", "ts_event")
-    assert(Maintenance.liveDeletes(Maintenance.commits(table)).size == 1)
+    assert(CommitLog.liveDeletes(CommitLog.commits(table)).size == 1)
     val (read, jobs) = jobsDuring {
       val t = IngestJob.readTable(spark, table)
       t.queryExecution.executedPlan // resolved and planned, not run
@@ -267,7 +313,7 @@ class MaintenanceSpec extends SparkSpec {
     val done = (1 to threads).map { _ =>
       pool.submit(new Runnable {
         def run(): Unit = (1 to iters).foreach { _ =>
-          CommitLock.withLogLock(work) {
+          CommitLog.withLock(work) {
             val v = new String(java.nio.file.Files.readAllBytes(counter)).trim.toLong
             Thread.sleep(1) // widen the window a lockless interleaving would hit
             java.nio.file.Files.write(counter, (v + 1).toString.getBytes)
@@ -347,8 +393,8 @@ class MaintenanceSpec extends SparkSpec {
     Files.createDirectories(staged)
     Files.writeString(staged.resolve("part-00000.parquet"), "torn half-write")
     assert(IngestJob.readTable(spark, table).collect().map(_.toSeq).toSet == before)
-    assert(Maintenance.gcStaging(table).isEmpty, "fresh staging must survive the default grace")
-    assert(Maintenance.gcStaging(table, maxAgeMs = -1000L) == Seq("batch=999-deadbeef"))
+    assert(CommitLog.gcStaging(table).isEmpty, "fresh staging must survive the default grace")
+    assert(CommitLog.gcStaging(table, maxAgeMs = -1000L) == Seq("batch=999-deadbeef"))
     assert(!Files.exists(staged))
 
     // CRASH WINDOW 2 — writer died between the atomic rename and the log

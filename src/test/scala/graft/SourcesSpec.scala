@@ -5,10 +5,10 @@ import graft.streaming.FileTopic
 import org.apache.spark.sql.functions._
 
 /** DataSource V2 connector tests (sources/CommitLogSource): short-name
-  * registration, row parity with Maintenance.commits, the lineage
+  * registration, row parity with CommitLog.commits, the lineage
   * visibility fold, column pruning reaching the reader, and SQL over the
   * registered view. The log fixture is written in the library's own
-  * `_snapshots.jsonl` format (the contract `Maintenance.commits` parses —
+  * `_snapshots.jsonl` format (the contract `CommitLog.commits` parses —
   * the same lines `IngestJob`/`Maintenance` append in production). */
 class SourcesSpec extends SparkSpec {
 
@@ -30,7 +30,7 @@ class SourcesSpec extends SparkSpec {
     writeLog(dir, fixture)
     val rows = spark.read.format("graft-commits").load(dir)
       .orderBy(col("seq_pos")).collect()
-    val expected = streaming.Maintenance.commits(dir)
+    val expected = streaming.CommitLog.commits(dir)
     assert(rows.length == expected.length && rows.length == 5)
     rows.zip(expected).zipWithIndex.foreach { case ((r, c), i) =>
       assert(r.getInt(0) == i && r.getLong(1) == c.id)
@@ -147,6 +147,23 @@ class SourcesSpec extends SparkSpec {
     val after = spark.read.format("graft").load(table)
     assert(after.count() == 150L, "compacted-away batches must not re-surface as dupes")
     assert(rows(after) == rows(streaming.IngestJob.readTable(spark, table)))
+  }
+
+  test("graft: a file: URI resolves a snapshot table through its commit log") {
+    val work = tmpDir("graft-ds-uri")
+    val topic = FileTopic(s"$work/topic")
+    for (seed <- Seq(44L, 45L)) {
+      streaming.TradeGen.produce(spark, topic, 30, seed)
+      streaming.IngestJob.start(spark, topic, s"$work/table", streaming.AnalyticsPipeline.tradeSchema,
+        Seq("trade_id", "symbol"), "ts_event", s"$work/ckpt",
+        org.apache.spark.sql.streaming.Trigger.AvailableNow()).awaitTermination()
+    }
+    val table = s"$work/table"
+    streaming.Maintenance.compact(spark, table)
+    // the replaced batch dirs are still on disk: a directory listing would double every row
+    val viaUri = spark.read.format("graft").load(s"file:$table")
+    assert(viaUri.count() == 60L)
+    assert(viaUri.except(streaming.IngestJob.readTable(spark, table)).isEmpty)
   }
 
   test("graft: live MOR equality-deletes refuse loudly; rewrite clears the refusal") {
