@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.FileMetaData
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
 import org.apache.spark.sql.{Column, DataFrame, GraftExprBridge, Observation, Row, SparkSession}
@@ -339,25 +340,29 @@ object IngestJob {
     * `inferTimestampNTZ=false`); TIMESTAMP(NANOS) has no Spark type, so
     * such a column fails here ([[graft.Tables.t]] truncates it to µs). */
   private def footerSchema(conf: Configuration, f: FileStatus): StructType = {
+    val meta = fileMeta(conf, f)
+    Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse {
+        import scala.jdk.CollectionConverters._
+        meta.getSchema.getColumns.asScala.find(_.getPrimitiveType.getLogicalTypeAnnotation match {
+          case ts: TimestampLogicalTypeAnnotation => ts.getUnit == TimeUnit.NANOS
+          case _ => false
+        }).foreach(c => throw new IllegalArgumentException(
+          s"${f.getPath}: column ${c.getPath.mkString(".")} is TIMESTAMP(NANOS), which " +
+            "Spark's parquet reader cannot read as a timestamp; read it through graft.Tables.t"))
+        val sql = SQLConf.get.clone()
+        sql.setConfString("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        new ParquetToSparkSchemaConverter(sql).convert(meta.getSchema)
+      }
+  }
+
+  /** A parquet file's footer without its row groups: the parquet schema and
+    * the key-value entries. */
+  private[graft] def fileMeta(conf: Configuration, f: FileStatus): FileMetaData = {
     val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf), HadoopReadOptions
       .builder(conf).withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
-    try {
-      val meta = r.getFooter.getFileMetaData
-      Option(meta.getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
-        .map(DataType.fromJson(_).asInstanceOf[StructType])
-        .getOrElse {
-          import scala.jdk.CollectionConverters._
-          meta.getSchema.getColumns.asScala.find(_.getPrimitiveType.getLogicalTypeAnnotation match {
-            case ts: TimestampLogicalTypeAnnotation => ts.getUnit == TimeUnit.NANOS
-            case _ => false
-          }).foreach(c => throw new IllegalArgumentException(
-            s"${f.getPath}: column ${c.getPath.mkString(".")} is TIMESTAMP(NANOS), which " +
-              "Spark's parquet reader cannot read as a timestamp; read it through graft.Tables.t"))
-          val sql = SQLConf.get.clone()
-          sql.setConfString("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-          new ParquetToSparkSchemaConverter(sql).convert(meta.getSchema)
-        }
-    } finally r.close()
+    try r.getFooter.getFileMetaData finally r.close()
   }
 
   /** Time travel (A5: "snapshot-id ≈ our snapshot-log head"; Iceberg

@@ -1,9 +1,15 @@
 package graft.streaming
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetWriter}
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.util.SerializableConfiguration
 
 /** Table maintenance for the ingest table: small-file compaction, snapshot
   * expiry, and MERGE (the roles Iceberg's `rewrite_data_files` /
@@ -100,40 +106,44 @@ object Maintenance {
         .select(col(key.name).as("_delkey"), lit(seq).as("_delseq"))
     }.reduce(_ unionByName _)
 
-  private def batchBytes(tableDir: String, id: Long): Long = {
-    val p = Paths.get(CommitLog.batchDir(tableDir, id))
-    if (!Files.exists(p)) 0L
-    else {
-      val s = Files.walk(p)
-      try s.filter(Files.isRegularFile(_)).mapToLong(Files.size(_)).sum
-      finally s.close()
-    }
-  }
-
   private def nextId(cms: Seq[Commit]): Long =
     math.max(CompactionIdBase, cms.map(_.id).max + 1)
 
   /** Write `df` partitioned by `p_date` to `dir`, counting its rows on the
-    * write itself: no second job over the written files. */
-  private def writeCounted(df: DataFrame, dir: java.nio.file.Path): Long = {
+    * write itself: no second job over the written files. `perFile` caps the
+    * rows of one file (0: no cap). */
+  private def writeCounted(df: DataFrame, dir: java.nio.file.Path, perFile: Long = 0L): Long = {
     val written = Observation()
-    df.observe(written, count(lit(1)).as("rows"))
-      .write.mode("overwrite").partitionBy("p_date").parquet(dir.toString)
+    val w = df.observe(written, count(lit(1)).as("rows")).write.mode("overwrite").partitionBy("p_date")
+    (if (perFile > 0) w.option("maxRecordsPerFile", perFile) else w).parquet(dir.toString)
     written.get("rows").asInstanceOf[Long]
   }
 
-  /** Rewrite all visible batches whose data dir is smaller than
-    * `smallBytes` into ONE new consolidated snapshot with ~`targetBytes`
-    * files, preserving the p_date partitioning. No-op (None) unless at
-    * least two small snapshots exist. The read+write is a distributed
-    * Spark job — at 100 TB scale this is the same shape as an Iceberg
-    * rewrite action: scan the small files cluster-wide, repartition to
-    * target file count, one atomic commit. Pending equality-deletes are
-    * applied while reading the candidates (the compacted copy sits at a
-    * later sequence than the deletes, so they correctly stop applying to
-    * it, and keep applying to untouched batches). The candidates are read
-    * in lineage order, so the compacted copy keeps the table's column
-    * order. */
+  /** Merge all visible batches whose data files sum to less than
+    * `smallBytes` into ONE new snapshot, preserving the p_date partitioning
+    * and splitting each date into files of about `targetBytes`. No-op (None)
+    * unless at least two small snapshots exist. Each candidate is listed
+    * once; that listing decides the candidates, the output files and what
+    * is copied. One of two ways, each a single Spark job followed by one
+    * atomic commit:
+    *  - copy, when the merge is a pure concatenation: no live equality
+    *    delete, and every file carries the same parquet schema and the same
+    *    Spark footer entries ([[copyPlan]]). The files' column chunks are
+    *    copied byte for byte, with their statistics, column and offset
+    *    indexes and bloom filters, one task per output file; nothing is
+    *    decoded, shuffled or re-encoded, so a round costs one sequential
+    *    copy of the small batches. Row groups keep the size ingest gave
+    *    them: compaction cuts the file count, not the row-group count. The
+    *    output passes the same check, so the next round copies it again.
+    *  - rewrite, otherwise (live MOR deletes, or candidates written under
+    *    different schemas): the candidates are read in lineage order, so
+    *    the compacted copy keeps the table's column order; pending
+    *    equality-deletes are applied while reading (the compacted copy sits
+    *    at a later sequence than the deletes, so they stop applying to it
+    *    and keep applying to untouched batches); the rows are re-encoded
+    *    into ~`targetBytes` files, sized by the candidates' rows per byte.
+    * At 100 TB scale either is the shape of an Iceberg rewrite action: the
+    * small files are processed cluster-wide and committed once. */
   def compact(
       spark: SparkSession,
       tableDir: String,
@@ -141,22 +151,104 @@ object Maintenance {
       targetBytes: Long = 128L << 20): Option[CompactionStats] = {
     val cms = commits(tableDir)
     if (cms.isEmpty) return None
-    val candidates = visibleIn(cms).filter(b => batchBytes(tableDir, b) < smallBytes)
-    if (candidates.size < 2) return None
+    val conf = spark.sparkContext.hadoopConfiguration
+    val visible = visibleIn(cms)
+    val (ids, listed) = visible.zip(IngestJob.batchFiles(conf, tableDir, visible))
+      .filter { case (_, (_, files)) => files.map(_.getLen).sum < smallBytes }.unzip
+    if (ids.size < 2) return None
 
     val newId = nextId(cms)
-    val totalBytes = candidates.map(batchBytes(tableDir, _)).sum
-    val nFiles = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    val df = IngestJob.readBatches(spark, tableDir, candidates)
     val staged = CommitLog.stageData(tableDir, newId)
-    val n = writeCounted(applyDeletes(spark, tableDir, df, cms).drop("batch")
-      .repartition(nFiles, col("p_date")), staged)
-    val replaced = candidates.sorted
+    val n = copyPlan(conf, cms, listed, targetBytes) match {
+      case Some(outputs) => copyChunks(spark, outputs, staged)
+      case None =>
+        val bytes = listed.flatMap(_._2).map(_.getLen).sum
+        val rows = cms.filter(c => ids.contains(c.id)).map(_.rows).sum
+        val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
+        val perFile = if (rows == 0 || bytes == 0) 0L
+          else math.max(1L, math.ceil(targetBytes.toDouble * rows / bytes).toLong)
+        writeCounted(applyDeletes(spark, tableDir, IngestJob.readBatches(spark, tableDir, ids), cms)
+          .drop("batch").repartition(nFiles, col("p_date")), staged, perFile)
+    }
+    val replaced = ids.sorted
     if (!CommitLog.commitStaged(tableDir, cms,
         Commit(newId, n, replaces = Some(replaced)), staged))
       throw new java.util.ConcurrentModificationException(
         s"compact: $tableDir log moved during compaction; re-run")
     Some(CompactionStats(newId, replaced, n))
+  }
+
+  /** The compaction of `candidates` (batch dir, files; lineage order) as a
+    * byte copy, when it is a pure concatenation: `prefix` holds no live
+    * equality delete, and every file has the same parquet schema and the
+    * same `org.apache.spark.*` footer entries (the Spark row schema, the
+    * writer's version, the legacy-datetime flags). Each partition dir's
+    * files, in lineage order, are packed into outputs of at most
+    * `targetBytes` (a larger file is an output by itself). Returns
+    * (partition dir relative to the batch dir, files) per output file;
+    * None when the rows must be rewritten. */
+  private[graft] def copyPlan(conf: Configuration, prefix: Seq[Commit],
+      candidates: Seq[(Path, Array[FileStatus])],
+      targetBytes: Long): Option[Seq[(String, Seq[FileStatus])]] = {
+    val files = candidates.flatMap { case (dir, fs) =>
+      fs.toSeq.map(f => dir.toUri.relativize(f.getPath.getParent.toUri).getPath -> f)
+    }
+    def layout(f: FileStatus) = {
+      val meta = IngestJob.fileMeta(conf, f)
+      (meta.getSchema, meta.getKeyValueMetaData.asScala.filter(_._1.startsWith("org.apache.spark.")).toMap)
+    }
+    if (liveDeletes(prefix).nonEmpty || files.isEmpty || files.map(f => layout(f._2)).distinct.size > 1)
+      None
+    else Some(files.map(_._1).distinct.flatMap { part =>
+      files.filter(_._1 == part).map(_._2).foldLeft(Vector.empty[Vector[FileStatus]]) {
+        case (outs :+ last, f) if last.map(_.getLen).sum + f.getLen <= targetBytes => outs :+ (last :+ f)
+        case (outs, f) => outs :+ Vector(f)
+      }.map(part -> _)
+    })
+  }
+
+  /** Write each output of a [[copyPlan]] under `staged` by copying its files'
+    * row groups in order, column chunk by column chunk, with their bloom
+    * filters, column and offset indexes: one Spark task per output file, one
+    * job. Each output's footer has its inputs' parquet schema and key-value
+    * entries. Returns the rows copied (the row groups' row counts). */
+  private[graft] def copyChunks(spark: SparkSession, outputs: Seq[(String, Seq[FileStatus])],
+      staged: java.nio.file.Path): Long = {
+    val conf = new SerializableConfiguration(spark.sparkContext.hadoopConfiguration)
+    val name = s"${java.util.UUID.randomUUID()}.c000.parquet"
+    val root = new Path(staged.toString)
+    val tasks = outputs.zipWithIndex.map { case ((part, files), i) =>
+      (new Path(if (part.isEmpty) root else new Path(root, part), f"part-$i%05d-$name").toString, files)
+    }
+    spark.sparkContext.parallelize(tasks, tasks.size)
+      .map { case (out, files) => copyFile(conf.value, new Path(out), files) }
+      .collect().sum
+  }
+
+  private def copyFile(conf: Configuration, out: Path, files: Seq[FileStatus]): Long = {
+    val meta = IngestJob.fileMeta(conf, files.head)
+    val schema = meta.getSchema
+    val w = new ParquetFileWriter(HadoopOutputFile.fromPath(out, conf), schema,
+      ParquetFileWriter.Mode.OVERWRITE, ParquetWriter.DEFAULT_BLOCK_SIZE, 0)
+    try {
+      w.start()
+      val rows = files.map { f =>
+        val in = HadoopInputFile.fromStatus(f, conf)
+        val r = ParquetFileReader.open(in)
+        val s = in.newStream()
+        try r.getRowGroups.asScala.map { rg =>
+          w.startBlock(rg.getRowCount)
+          rg.getColumns.asScala.foreach(c => w.appendColumnChunk(
+            schema.getColumnDescription(c.getPath.toArray), s, c,
+            r.readBloomFilter(c), r.readColumnIndex(c), r.readOffsetIndex(c)))
+          w.endBlock()
+          rg.getRowCount
+        }.sum
+        finally { s.close(); r.close() }
+      }.sum
+      w.end(meta.getKeyValueMetaData)
+      rows
+    } finally w.close()
   }
 
   /** Copy-on-write MERGE (Iceberg `MERGE INTO … WHEN MATCHED THEN UPDATE

@@ -45,9 +45,13 @@ object TradeGen {
     val id = col("id")
     // one 64-bit hash per (row, field) pair; pmod (not abs) for
     // non-negativity — abs(Long.MinValue) is negative
-    def h(field: Int) = pmod(xxhash64(id, lit(seed), lit(field)), lit(Long.MaxValue))
+    def h(field: Int) = pmod(xxhash64(id, col("seed"), lit(field)), lit(Long.MaxValue))
     val symbolArr = array(symbols.map(lit): _*)
     spark.range(0, n)
+      // the seed enters as a UDF's value, not a literal: generated code
+      // inlines a literal, so every new seed would compile new classes;
+      // the hash input (a non-null long) is the same either way
+      .select(id, udf(() => seed).apply().as("seed"))
       .select(
         // UUID-shaped deterministic id from the index (producer.py:26)
         concat_ws("-",

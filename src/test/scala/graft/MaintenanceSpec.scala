@@ -33,6 +33,57 @@ class MaintenanceSpec extends SparkSpec {
     }
   }
 
+  private def hconf = spark.sparkContext.hadoopConfiguration
+
+  /** The parquet files of `batches` in lineage order. */
+  private def batchFiles(table: String, batches: Seq[Long]) =
+    IngestJob.batchFiles(hconf, table, batches).flatMap(_._2)
+
+  /** Whether a compaction of every visible batch of `table` would copy
+    * column chunks (a pure concatenation) rather than rewrite rows. */
+  private def copies(table: String): Boolean = {
+    val cms = CommitLog.commits(table)
+    Maintenance.copyPlan(hconf, cms, IngestJob.batchFiles(hconf, table, CommitLog.visibleIn(cms)),
+      128L << 20).isDefined
+  }
+
+  /** Each row group of `files`, in order, as its row count and, per column
+    * chunk, the chunk's metadata, statistics, column index and offset index
+    * (page offsets relative to the chunk's start, so a moved chunk compares
+    * equal to its source). */
+  private def rowGroups(files: Seq[org.apache.hadoop.fs.FileStatus]): Seq[Seq[String]] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    def bytes(b: java.nio.ByteBuffer) = {
+      val d = b.duplicate(); val a = new Array[Byte](d.remaining); d.get(a); a.toSeq
+    }
+    files.flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, hconf))
+      try r.getRowGroups.asScala.toSeq.map { rg =>
+        s"rows=${rg.getRowCount}" +: rg.getColumns.asScala.toSeq.map { c =>
+          val oi = r.readOffsetIndex(c)
+          assert(oi != null, s"${f.getPath} ${c.getPath}: no offset index")
+          val pages = (0 until oi.getPageCount).map(i =>
+            (oi.getOffset(i) - c.getStartingPos, oi.getCompressedPageSize(i), oi.getFirstRowIndex(i)))
+          // parquet writes no column index for INT96 (Spark's timestamps)
+          val ci = Option(r.readColumnIndex(c)).fold("no column index")(ci => Seq(
+            ci.getBoundaryOrder, ci.getNullPages, ci.getNullCounts,
+            ci.getMinValues.asScala.map(bytes), ci.getMaxValues.asScala.map(bytes)).mkString(" "))
+          Seq(c.getPath, c.getCodec, c.getEncodings, c.getValueCount, c.getTotalSize,
+            c.getTotalUncompressedSize, c.getStatistics, ci, pages).mkString(" ")
+        }
+      } finally r.close()
+    }
+  }
+
+  /** The `org.apache.spark.*` footer entries of `f`. */
+  private def sparkEntries(f: org.apache.hadoop.fs.FileStatus): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    IngestJob.fileMeta(hconf, f).getKeyValueMetaData.asScala.toMap
+      .filter(_._1.startsWith("org.apache.spark."))
+  }
+
   test("compaction: one consolidated snapshot, same rows, fewer files, time travel intact") {
     val work = tmpDir("graft-compact")
     ingestOnce(work, 100); ingestOnce(work, 50); ingestOnce(work, 50)
@@ -94,6 +145,7 @@ class MaintenanceSpec extends SparkSpec {
     commit(2L, Seq((3L, 30L, "c2", ts)).toDF("a", "b", "c", "ts"))
     val cols = IngestJob.readTable(spark, table).columns.toSeq
     assert(cols == Seq("a", "c", "ts", "b"))
+    assert(!copies(table), "candidates written under two schemas take the rewrite")
     val stats = Maintenance.compact(spark, table).get
     assert(stats.replaced == Seq(2L, Maintenance.CompactionIdBase))
     assert(IngestJob.readTable(spark, table).columns.toSeq == cols)
@@ -245,6 +297,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(IngestJob.readTableAsOf(spark, table, 1L).count() == 78L)
     // a compaction replaces the tombstone commit too; without an expiry
     // every snapshot still resolves
+    assert(!copies(table), "a live equality delete takes the rewrite")
     assert(Maintenance.compact(spark, table).get.replaced.contains(tomb.newBatch))
     assert(IngestJob.readTableAsOf(spark, table, tomb.newBatch).count() == 48L)
     assert(IngestJob.readTable(spark, table).count() == 78L)
@@ -414,5 +467,98 @@ class MaintenanceSpec extends SparkSpec {
     assert(Maintenance.visibleBatches(table) == Set(cid))
     val after = IngestJob.readTable(spark, table).collect().map(_.toSeq).toSet
     assert(after == before, "healed commit must carry exactly the committed rows, no torn extras")
+  }
+
+  test("compaction copies column chunks: row groups, statistics and page indexes unchanged, one job") {
+    val work = tmpDir("graft-compact-copy")
+    ingestOnce(work, 100, seed = 40); ingestOnce(work, 50, seed = 41); ingestOnce(work, 50, seed = 42)
+    val table = s"$work/table"
+    val inputs = batchFiles(table, Seq(0L, 1L, 2L))
+    val before = IngestJob.readTable(spark, table).collect().map(_.toSeq).toSet
+    assert(copies(table))
+
+    val (stats, jobs, stages, tasks) = stagesDuring(Maintenance.compact(spark, table).get)
+    val cid = Maintenance.CompactionIdBase
+    assert(stats.newBatch == cid && stats.replaced == Seq(0L, 1L, 2L) && stats.rowsRewritten == 200L)
+    // one job of one stage (no Exchange), one task per output file
+    val out = batchFiles(table, Seq(cid))
+    assert(out.size == 1)
+    assert((jobs, stages, tasks) == (1, 1, 1))
+    // the inputs' row groups, in lineage order, byte for byte
+    assert(rowGroups(out) == rowGroups(inputs))
+    assert(rowGroups(out).flatten.filter(_.startsWith("[trade_id]")).forall(!_.contains("no column index")))
+    assert(inputs.map(sparkEntries).distinct == Seq(sparkEntries(out.head)))
+    assert(IngestJob.readTable(spark, table).collect().map(_.toSeq).toSet == before)
+    assert(IngestJob.readTable(spark, table).count() == 200L)
+
+    // the next round copies the compacted batch again, after the new ingests
+    ingestOnce(work, 30, seed = 43); ingestOnce(work, 20, seed = 44)
+    assert(copies(table))
+    val again = batchFiles(table, Seq(cid, 3L, 4L))
+    val stats2 = Maintenance.compact(spark, table).get
+    assert(stats2.replaced == Seq(3L, 4L, cid) && stats2.rowsRewritten == 250L)
+    val out2 = batchFiles(table, Seq(stats2.newBatch))
+    assert(rowGroups(out2) == rowGroups(again))
+    assert(IngestJob.readTable(spark, table).count() == 250L)
+  }
+
+  test("the copy splits a date into outputs of at most targetBytes, in lineage order") {
+    val work = tmpDir("graft-compact-pack")
+    ingestOnce(work, 60, seed = 50); ingestOnce(work, 60, seed = 51); ingestOnce(work, 60, seed = 52)
+    val table = s"$work/table"
+    val inputs = batchFiles(table, Seq(0L, 1L, 2L))
+    val target = inputs.map(_.getLen).sum / 3
+    val before = IngestJob.readTable(spark, table).collect().map(_.toSeq).toSet
+    val (stats, jobs, stages, tasks) = stagesDuring(Maintenance.compact(spark, table, targetBytes = target).get)
+    val out = batchFiles(table, Seq(stats.newBatch))
+    assert(out.size >= 3 && out.forall(_.getPath.getParent.getName.startsWith("p_date=")))
+    assert((jobs, stages, tasks) == (1, 1, out.size))
+    assert(rowGroups(out) == rowGroups(inputs))
+    assert(IngestJob.readTable(spark, table).collect().map(_.toSeq).toSet == before)
+  }
+
+  test("the rewrite splits a date into about targetBytes files") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val work = tmpDir("graft-compact-split")
+    ingestOnce(work, 50, seed = 60); ingestOnce(work, 50, seed = 61)
+    val table = s"$work/table"
+    val updates = IngestJob.readTable(spark, table).orderBy("trade_id").limit(2)
+      .withColumn("price", lit(9999.0))
+    val mor = Maintenance.mergeIntoMor(spark, table, updates, "trade_id", "ts_event")
+    assert(!copies(table))
+    val cms = CommitLog.commits(table)
+    val target = batchFiles(table, CommitLog.visibleIn(cms)).map(_.getLen).sum / 3
+    val stats = Maintenance.compact(spark, table, targetBytes = target).get
+    assert(stats.replaced == Seq(0L, 1L, mor.newBatch) && stats.rowsRewritten == 100L)
+    val out = batchFiles(table, Seq(stats.newBatch))
+    assert(out.map(_.getPath.getParent.getName).distinct.size == 1, "one date")
+    assert(out.size >= 2, s"one date, ${out.size} file(s)")
+    val after = IngestJob.readTable(spark, table)
+    assert(after.count() == 100L)
+    assert(after.filter(col("price") === 9999.0).count() == 2L)
+  }
+
+  test("a copy staged but not committed stays invisible, and staging GC reclaims it") {
+    import java.nio.file.{Files, Paths}
+    val work = tmpDir("graft-copy-crash")
+    ingestOnce(work, 60, seed = 70); ingestOnce(work, 40, seed = 71)
+    val table = s"$work/table"
+    val before = IngestJob.readTable(spark, table).collect().map(_.toSeq).toSet
+    val cms = CommitLog.commits(table)
+    val cid = Maintenance.CompactionIdBase
+    val plan = Maintenance.copyPlan(hconf, cms,
+      IngestJob.batchFiles(hconf, table, CommitLog.visibleIn(cms)), 128L << 20).get
+    val staged = CommitLog.stageData(table, cid)
+    assert(Maintenance.copyChunks(spark, plan, staged) == 100L)
+    assert(parquetFiles(staged.toString).nonEmpty)
+    // the writer dies here: no commit line, so nothing changed for readers
+    assert(CommitLog.commits(table) == cms)
+    assert(Maintenance.visibleBatches(table) == Set(0L, 1L))
+    assert(!Files.exists(Paths.get(CommitLog.batchDir(table, cid))))
+    assert(IngestJob.readTable(spark, table).collect().map(_.toSeq).toSet == before)
+    assert(CommitLog.gcStaging(table, maxAgeMs = -1000L) == Seq(staged.getFileName.toString))
+    val stats = Maintenance.compact(spark, table).get
+    assert(stats.newBatch == cid && stats.rowsRewritten == 100L)
+    assert(IngestJob.readTable(spark, table).collect().map(_.toSeq).toSet == before)
   }
 }

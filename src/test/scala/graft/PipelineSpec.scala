@@ -247,6 +247,21 @@ class PipelineSpec extends SparkSpec {
     assert(IngestJob.readTable(s, s"$work/table").count() == 400L)
   }
 
+  test("TradeGen: a new seed compiles no code, and a seed's trades are pinned") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def envelope(seed: Long) = Topics.envelope(TradeGen.trades(spark, 50L, seed), "trade_id")
+      .collect().map(r => s"${r.getString(0)}\t${r.getString(1)}").mkString("\n")
+    envelope(1L)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val rendered = envelope(3L)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == before)
+    // the topic messages of seed 3, as the generator rendered them when it
+    // still inlined the seed as a literal
+    val sha = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(rendered.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    assert(sha == "fabe799ce9c9112004e20d0d17deb477127ac6f981c5065ecbc9dcaf02106f5f", rendered.take(300))
+  }
+
   test("a batch in which every row is rejected commits rows:0 and counts every reject") {
     val work = tmpDir("graft-allreject")
     val topic = FileTopic(s"$work/topic")

@@ -29,17 +29,26 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** `body`'s result and the number of Spark jobs started while it ran. */
   def jobsDuring[A](body: => A): (A, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val (a, jobs, _, _) = stagesDuring(body)
+    (a, jobs)
+  }
+
+  /** `body`'s result and the Spark jobs, stages and tasks started while it ran. */
+  def stagesDuring[A](body: => A): (A, Int, Int, Int) = {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler._
+    val (jobs, stages, tasks) = (new AtomicInteger, new AtomicInteger, new AtomicInteger)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = stages.incrementAndGet()
+      override def onTaskStart(e: SparkListenerTaskStart): Unit = tasks.incrementAndGet()
     }
     org.apache.spark.ListenerBusDrain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       val a = body
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      (a, jobs.get)
+      (a, jobs.get, stages.get, tasks.get)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
