@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every SparkEntry query on SPARK_GRAFT_SF_DIR,
   * one JSON line on stdout.
   *
@@ -39,6 +37,45 @@ import org.apache.spark.sql.SparkSession
   * combined JSON is also written to `/root/repo/BENCH_SELF.json`. Seconds
   * are rounded to 0.1 ms to keep the lines compact. */
 object Bench {
+
+  /** Counts SILENT whole-stage-codegen fallbacks: a stage whose generated
+    * method exceeds spark.sql.codegen.hugeMethodLimit reverts to
+    * expression-tree interpretation with only an INFO log — a 50–100×
+    * per-row tax invisible at WARN (the x94 finding). Raises the codegen
+    * logger to INFO, installs a counting appender, and returns the (label
+    * setter, counts snapshot) pair. Attribution caveat: events are
+    * attributed to the CURRENT label at arrival time; log4j delivery is
+    * not barriered with job completion, so a straggling executor event
+    * can in principle charge query N's fallback to query N+1. Acceptable
+    * for a diagnostic: the contract is "which keys trip it", and a
+    * ±1-key smear still points at the right family. */
+  private def attachFallbackMeter(): (String => Unit, () => Map[String, Int]) = {
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.WholeStageCodegenExec",
+      org.apache.logging.log4j.Level.INFO)
+    val counts = scala.collection.mutable.Map.empty[String, Int]
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+      "fallback-audit", null,
+      org.apache.logging.log4j.core.layout.PatternLayout.createDefaultLayout(),
+      false, Array.empty) {
+      @volatile var current: String = "?"
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (m.contains("Found too long generated codes"))
+          counts.synchronized { counts(current) = counts.getOrElse(current, 0) + 1 }
+      }
+    }
+    appender.start()
+    val ctx = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[org.apache.logging.log4j.core.LoggerContext]
+    ctx.getConfiguration.getLoggerConfig(
+      "org.apache.spark.sql.execution.WholeStageCodegenExec").addAppender(
+      appender, org.apache.logging.log4j.Level.INFO, null)
+    ctx.updateLoggers()
+    (label => appender.current = label,
+      () => counts.synchronized { counts.toMap })
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     def loadAvg: Double =
@@ -204,11 +241,10 @@ object Bench {
     val rowsHot = scala.collection.mutable.Map.empty[String, Long]
     // Silent-fallback meter (r19): the logged half of the interpretation
     // class (janino "too long generated codes" → whole-stage falls back to
-    // interpreted eval at INFO level) counted per key into the artifact —
-    // FallbackAudit's appender as a permanent bench meter. The UNLOGGED
-    // half (compiles but exceeds HotSpot's 8 KB JIT cutoff) is what the
-    // rows/ms-per-row screen above exists for.
-    val (fbSet, fbCounts) = FallbackAudit.attach()
+    // interpreted eval at INFO level) counted per key into the artifact.
+    // The UNLOGGED half (compiles but exceeds HotSpot's 8 KB JIT cutoff)
+    // is what the rows/ms-per-row screen above exists for.
+    val (fbSet, fbCounts) = attachFallbackMeter()
     // a failed query must NOT read as a fast success: sentinel -1, excluded
     // from the total, listed in "failed"
     // Per-key watchdog (r19, for the sf10 full-suite scale gate): a key

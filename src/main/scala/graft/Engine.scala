@@ -3,40 +3,21 @@ package graft
 import org.apache.spark.GraftPins
 import org.apache.spark.sql.SparkSession
 
-/** Canonical engine session: local[cpus] with the engine defaults, the
-  * Graft extensions (custom expressions + optimizer rules), and
-  * `SPARK_GRAFT_CONF="k=v;k=v"` overrides for experiments.
+/** The engine session, and the only place a `SparkSession` is built: every
+  * main (Bench, Verify, the audits), the benchmark harness and the test
+  * fixture take [[builder]] or [[session]], so the oracle gate, the tests
+  * and the benchmark run the plans the engine serves. It is local[cpus]
+  * with the engine defaults, the Graft extensions (custom expressions +
+  * optimizer rules), and `SPARK_GRAFT_CONF="k=v;k=v"` overrides for
+  * experiments.
   *
   * Engine defaults keep AQE on (coalescing, skew-join handling — the 100 TB
   * posture); individual mains may layer a latency profile on top (see
   * Bench). */
 object Engine {
-  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-  /** CodeGenerator's cache is keyed on (context classloader, code text).
-    * With artifact isolation on (Spark's default) every session clone gets
-    * its own artifact state and its tasks run under a fresh executor
-    * classloader, and every `writeStream.start()` clones the session: each
-    * streaming query recompiled every generated class, and the JIT started
-    * over on each. The engine adds no session artifacts (no addArtifact or
-    * addJar), so isolation buys it nothing. Spark reads the flag when a
-    * session is created, so it belongs on the builder. */
-  private[graft] val SharedCodeCache: (String, String) = "spark.sql.artifact.isolation.enabled" -> "false"
-
-  /** Local files go through [[ForkFreeLocalFileSystem]] (FileSystem API)
-    * and [[ForkFreeLocalFs]] (FileContext, which Spark's streaming
-    * checkpoint manager uses). Without libhadoop the stock local classes
-    * fork `chmod` for every created file and directory and `readlink` for
-    * every checkpoint rename: about 150 processes per cycle op, each
-    * costing milliseconds, on a path that only commits files.
-    *
-    * Hadoop's `FileSystem.CACHE` is keyed by scheme and user, not by conf,
-    * so the first `FileSystem.get("file:…")` in a JVM fixes the class for
-    * every later caller, whatever its conf says. [[session]] is the first
-    * call in every main, and the test fixture takes the same settings. */
-  private[graft] val LocalFs: Seq[(String, String)] = Seq(
-    "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
-    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
+  /** `SPARK_GRAFT_CPUS` is the deployment setting; without it the session
+    * takes the cores the JVM measures. */
+  def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
 
   /** `defaults` apply after the engine base confs but BEFORE the
     * `SPARK_GRAFT_CONF` env overrides, so experiments always win. */
@@ -53,18 +34,38 @@ object Engine {
       // Under the UTC-pinned session the two types carry identical
       // wall-clock micros, so reading everything as TIMESTAMP is exact and
       // makes the suite immune to the physical type the data generator
-      // happens to emit. Tables.load additionally normalizes NTZ columns
-      // for sessions built outside this builder.
+      // happens to emit. Tables.load still casts NTZ columns: a file Spark
+      // wrote as NTZ says so in its footer, whatever this flag says.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.debug.maxToStringFields", "2000")
       // static conf, default 100: a 58-query suite × several codegen units
       // each evicts round-robin, so every warm query pays a janino recompile
       // (~0.5–1 s). Sized to hold the whole suite's generated classes.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // one compiled class per code text across streaming queries
-      .config(SharedCodeCache._1, SharedCodeCache._2)
-      // no forked process per local file
-      .config(LocalFs.toMap)
+      // One compiled class per code text across streaming queries.
+      // CodeGenerator's cache is keyed on (context classloader, code text).
+      // With artifact isolation on (Spark's default) every session clone
+      // gets its own artifact state and its tasks run under a fresh
+      // executor classloader, and every `writeStream.start()` clones the
+      // session: each streaming query recompiled every generated class,
+      // and the JIT started over on each. The engine adds no session
+      // artifacts (no addArtifact or addJar), so isolation buys it
+      // nothing. Spark reads the flag when a session is created, so it
+      // belongs on the builder.
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      // Local files go through ForkFreeLocalFileSystem (FileSystem API)
+      // and ForkFreeLocalFs (FileContext, which Spark's streaming
+      // checkpoint manager uses). Without libhadoop the stock local
+      // classes fork `chmod` for every created file and directory and
+      // `readlink` for every checkpoint rename: about 150 processes per
+      // cycle op, each costing milliseconds, on a path that only commits
+      // files. Hadoop's `FileSystem.CACHE` is keyed by scheme and user,
+      // not by conf, so the first `FileSystem.get("file:…")` in a JVM
+      // fixes the class for every later caller, whatever its conf says:
+      // this builder is the first call in every main and in the test
+      // fixture.
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
       // Named SQL catalog over the engine's DSv2 connector: three-part
       // names (`SELECT … FROM graft.sf001.lineitem`) resolve through
       // sources.GraftCatalog to Spark's parquet scan over the resolved

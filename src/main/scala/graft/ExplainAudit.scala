@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit over every SparkEntry query: flags the anti-patterns the 100 TB
   * mandate forbids (unexpected cartesian products, nested-loop joins off the
   * broadcast path, global sorts where none is required). One line per query.
@@ -76,13 +74,7 @@ object ExplainAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
     var flagged = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
@@ -101,7 +93,9 @@ object ExplainAudit {
         else println(s"[audit] $name: ok")
       } catch { case e: Throwable =>
         flagged += 1; println(s"[audit] $name: ERROR ${e.getMessage.take(120)}")
-      }
+      } finally
+        // building an eager key pins its checkpoints: release them per key
+        Engine.reapLocalCheckpoints(spark)
     }
     println(s"[audit] flagged: $flagged")
     spark.stop()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspector: runMain graft.ExplainQ <queryName> [sfDir] — prints the
   * formatted physical plan of one SparkEntry query (the explain-and-iterate
   * loop the 100 TB mandate requires). */
@@ -9,13 +7,7 @@ object ExplainQ {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.queries(name)(spark, sfDir).explain("formatted")
     spark.stop()

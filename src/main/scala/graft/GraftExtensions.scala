@@ -10,9 +10,10 @@ import graft.functions.{FloatDot, FloatPrefixDots, H60, H60Array, MinHashSigs, S
   * registers the engine's custom Catalyst expressions as SQL functions, so
   * `spark.sql("SELECT float_dot(a, b) ...")` works next to the Column API.
   *
-  * Wire up with:
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
-  * or config: spark.sql.extensions=graft.GraftExtensions
+  * [[Engine.builder]] installs it. A session built elsewhere (a user's
+  * own, reading through the `graft` source) takes it with
+  * `withExtensions(new GraftExtensions)` or
+  * `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -13,9 +13,17 @@ import graft.operators._
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001 — the reference's canonical
     * 10-aggregate analytics query (duckdb/query_and_publish.py:107-122)
-    * transplanted onto events. Driver smoke-checks rows>0. */
-  def entry(spark: SparkSession): DataFrame =
+    * transplanted onto events. Driver smoke-checks rows>0.
+    *
+    * The one surface that takes the caller's session rather than one from
+    * [[Engine.builder]], so it sets the one engine conf the read needs:
+    * `events.ts` is TIMESTAMP(NANOS), which Spark 4 rejects unless read as
+    * raw nanos (see [[Tables.t]]). An NTZ column needs nothing here:
+    * `Tables.t` casts it whatever the session infers. */
+  def entry(spark: SparkSession): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     CoreQueries.q01(spark, "/root/testdata/sf0.001")
+  }
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

@@ -21,25 +21,17 @@ object Tables {
   private val dfCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, String, String), DataFrame]
 
-  /** Drop cache entries whose owning session has been stopped. O(entries),
-    * entries = live sessions × tables — trivially small; runs on each cached
-    * lookup so a long-lived multi-session process self-cleans. */
-  private def evictStopped(): Unit = {
-    dfCache.filterInPlace { case ((owner, _, _, _), _) => !owner.sparkContext.isStopped }
-    statCache.filterInPlace { case ((owner, _, _), _) => !owner.sparkContext.isStopped }
-  }
-
-  /** On-disk size of a table, memoized per (session, dir, name) — keyed by
-    * session so size stats share dfCache's lifetime assumption exactly: a
-    * table path regenerated between sessions re-stats instead of reusing a
-    * stale size for the pin decision (r19, ADVICE). See [[t]]. */
-  private val statCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), Long]
-  private def tableBytes(spark: SparkSession, dir: String, name: String): Long =
-    statCache.getOrElseUpdate((spark, dir, name), {
-      val f = new java.io.File(s"$dir/$name.parquet")
-      if (f.isDirectory) f.listFiles.map(_.length).sum else f.length
-    })
+  /** Memory mode pins a table only up to this many bytes on disk (r16,
+    * measured at sf10): columnar-caching a text-heavy or fact-scale table
+    * made compute-dense queries SLOWER than parquet re-reads — x151 ran
+    * 135 s against the cached 55 MB documents table vs 20.5 s against
+    * parquet (same join tree; InMemoryTableScan string batches decode
+    * slower than the dictionary-encoded vectorized parquet scan, and
+    * GB-scale caches spill). The 100 TB rule this encodes: pin dimensions
+    * and small hot tables, let the columnar format serve big/wide
+    * payloads. 32 MiB keeps every sf0.1 bench table cached (whole dataset
+    * ~100 MB) and auto-excludes the sf10 text/fact tables. */
+  private val CacheMaxBytes = 32L << 20
 
   /** Catalog-style table resolution with a two-tier cache, selected by the
     * session conf `spark.graft.tableCache`:
@@ -63,48 +55,25 @@ object Tables {
     * scan by Catalyst (verified via explain: PushedFilters).
     *
     * `events.ts` is TIMESTAMP(NANOS) in the parquet footer, which Spark's
-    * vectorized reader rejects; we read it as raw nanos (legacy conf) and
-    * truncate to a microsecond TimestampType — the same ns→µs truncation
-    * DuckDB applies, so oracle renderings agree. Integer `div` (not `/`):
-    * epoch-nanos exceed 2^53, double arithmetic would corrupt them. */
+    * vectorized reader rejects; we read it as raw nanos (the legacy conf
+    * Engine.builder sets) and truncate to a microsecond TimestampType —
+    * the same ns→µs truncation DuckDB applies, so oracle renderings agree.
+    * Integer `div` (not `/`): epoch-nanos exceed 2^53, double arithmetic
+    * would corrupt them. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val mode = spark.conf.get("spark.graft.tableCache", "meta")
     if (mode == "off") load(spark, dir, name)
     else {
-      evictStopped()
-      // memory mode caps what it pins (r16, measured at sf10): columnar-
-      // caching a text-heavy or fact-scale table made compute-dense
-      // queries SLOWER than parquet re-reads — x151 ran 135 s against the
-      // cached 55 MB documents table vs 20.5 s against parquet (same join
-      // tree; InMemoryTableScan string batches decode slower than the
-      // dictionary-encoded vectorized parquet scan, and GB-scale caches
-      // spill). The 100 TB rule this encodes: pin dimensions and small hot
-      // tables, let the columnar format serve big/wide payloads. Default
-      // 32 MiB keeps every sf0.1 bench table cached (whole dataset
-      // ~100 MB) and auto-excludes the sf10 text/fact tables.
-      // The file stat + cap resolution happen OUTSIDE getOrElseUpdate and
-      // the resolved pin DECISION is part of the cache key (r17, ADVICE):
-      // changing spark.graft.cacheMaxBytes mid-session must build a fresh
-      // entry, not silently serve one pinned under the old cap; and meta
-      // mode must not pay a directory listing it never uses.
-      // bytes memoized per (dir, name) — r18, ADVICE: the stat + listFiles
-      // ran on EVERY t() call in memory mode; table files are immutable
-      // for a session (the same assumption dfCache itself makes)
-      val pin = mode == "memory" &&
-        tableBytes(spark, dir, name) <= spark.conf.get("spark.graft.cacheMaxBytes",
-          (32L << 20).toString).toLong
-      if (mode == "memory") {
-        // a cacheMaxBytes flip mid-session changes the pin decision; the
-        // displaced sibling entry must not keep its blocks persisted
-        // (r18, ADVICE)
-        dfCache.remove((spark, s"$mode/${!pin}", dir, name))
-          .foreach(old => if (!pin) { old.unpersist(); () })
-      }
-      dfCache.getOrElseUpdate((spark, s"$mode/$pin", dir, name), {
+      dfCache.filterInPlace { case ((owner, _, _, _), _) => !owner.sparkContext.isStopped }
+      dfCache.getOrElseUpdate((spark, mode, dir, name), {
         val df = load(spark, dir, name)
-        if (!pin) df
+        // the stat runs once per entry, and only in memory mode
+        val bytes = if (mode == "memory") {
+          val f = new java.io.File(s"$dir/$name.parquet")
+          if (f.isDirectory) f.listFiles.map(_.length).sum else f.length
+        } else Long.MaxValue
+        if (bytes > CacheMaxBytes) df
         else {
-          val bytes = tableBytes(spark, dir, name)
           val parts = math.max(1L, math.min(
             spark.sparkContext.defaultParallelism.toLong, bytes / (2L << 20))).toInt
           val r = if (parts > 1) df.repartition(parts) else df
@@ -116,17 +85,17 @@ object Tables {
   }
 
   private def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = spark.read.parquet(s"$dir/$name.parquet")
     val df = raw.schema.fields
       .find(f => f.name == "ts" && f.dataType == org.apache.spark.sql.types.LongType)
       .map(_ => raw.withColumn("ts", timestamp_micros(expr("ts div 1000"))))
       .getOrElse(raw)
-    // Normalize any TIMESTAMP_NTZ column (tz-less parquet physical type,
-    // inferred when a session lacks Engine's inferTimestampNTZ=false pin) to
-    // TIMESTAMP. Exact under the UTC-pinned session: the cast reinterprets
-    // the same wall-clock micros. Keeps every operator on one timestamp
-    // type regardless of how the data generator wrote the files.
+    // Normalize any TIMESTAMP_NTZ column to TIMESTAMP. Engine's
+    // inferTimestampNTZ=false pin covers tz-less parquet, but a file Spark
+    // wrote as NTZ carries the type in its footer's row metadata. Exact
+    // under the UTC-pinned session: the cast reinterprets the same
+    // wall-clock micros. Keeps every operator on one timestamp type
+    // regardless of how the data generator wrote the files.
     df.schema.fields.filter(_.dataType == org.apache.spark.sql.types.TimestampNTZType)
       .foldLeft(df)((acc, f) => acc.withColumn(f.name, col(f.name).cast("timestamp")))
   }

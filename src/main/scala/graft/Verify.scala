@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -35,26 +34,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Same extensions as the engine session (custom exprs + optimizer rules):
-    // the correctness gate must exercise the same plans Bench runs.
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // the engine's local FileSystem: the gate reads through the same I/O path
-      .config(Engine.LocalFs.toMap)
-    // same experiment seam as Engine.builder: lets the oracle gate run in
-    // alternate configurations (e.g. tableCache=off — every query re-reads
-    // its tables) without changing the main's arguments or output
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.contains("=")).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2); b.config(k, v)
-    })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the engine session: the gate runs the plans Bench serves, and
+    // SPARK_GRAFT_CONF runs it in alternate configurations (e.g.
+    // tableCache=off) without changing the main's arguments or output
+    val spark = Engine.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.streaming.IngestJob
 
@@ -14,13 +13,7 @@ object VerifyTable {
     val tableDir = args(0)
     val keyCol = args(1)
     val tsCol = args.lift(2)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
 
     val snapshots = IngestJob.committedBatches(tableDir).toSeq.sorted
     println(s"[verify-table] snapshot head: ${snapshots.lastOption.getOrElse("<none>")} (${snapshots.size} commits)")

@@ -58,11 +58,6 @@ object BenchmarkQueries {
     while (it.hasNext) if (it.next().getKey.sparkContext.isStopped) it.remove()
     if (registered.get(s) != d) registered.synchronized {
       if (registered.get(s) != d) {
-        // Engine pins this at the builder; for sessions built elsewhere
-        // (Verify) pin it here before schema inference: a TIMESTAMP_NTZ
-        // o_orderdate hits a Spark CBO bug (FilterEstimation MatchError on
-        // TimestampNTZType) and NTZ/TIMESTAMP must not vary by session.
-        s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         benchTables.foreach { n =>
           s.sql(s"DROP TABLE IF EXISTS g_$n")
           s.sql(s"CREATE TABLE g_$n USING parquet LOCATION '$d/$n.parquet'")

@@ -35,8 +35,6 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * Registered via [[graft.GraftExtensions]] (`injectOptimizerRule`).
   */
 case class PresentationSortRule(spark: SparkSession) extends Rule[LogicalPlan] {
-  private def enabled: Boolean =
-    spark.conf.get("spark.graft.presentationSort", "true").toBoolean
   private def maxBytes: Long =
     spark.conf.get("spark.graft.presentationSort.maxBytes", (64L << 20).toString).toLong
 
@@ -45,16 +43,13 @@ case class PresentationSortRule(spark: SparkSession) extends Rule[LogicalPlan] {
   private def rewrite(s: Sort): LogicalPlan =
     Sort(s.order, global = false, Repartition(1, shuffle = true, s.child))
 
-  override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) plan
-    else plan match {
-      case s: Sort if s.global && small(s) => rewrite(s)
-      case cmd: Command =>
-        cmd.withNewChildren(cmd.children.map {
-          case s: Sort if s.global && small(s) => rewrite(s)
-          case c => c
-        })
-      case other => other
-    }
+  override def apply(plan: LogicalPlan): LogicalPlan = plan match {
+    case s: Sort if s.global && small(s) => rewrite(s)
+    case cmd: Command =>
+      cmd.withNewChildren(cmd.children.map {
+        case s: Sort if s.global && small(s) => rewrite(s)
+        case c => c
+      })
+    case other => other
   }
 }

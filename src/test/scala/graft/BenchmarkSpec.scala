@@ -61,13 +61,8 @@ class BenchmarkSpec extends SparkSpec {
   }
 
   test("q42–q46 run via three-part catalog names: connector pushdown, value-identical results") {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set("spark.sql.catalog.graft", "graft.sources.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft.root", "/root/testdata")
-    s.conf.set("spark.sql.catalog.graft.ns.sf0001", "sf0.001")
     BenchmarkQueries.catalogSql("sf0001").foreach { case (name, sql) =>
-      val viaCat = s.sql(sql)
+      val viaCat = spark.sql(sql)
       val plan = viaCat.queryExecution.executedPlan.toString
       assert(plan.contains("BatchScan graft:"), s"$name must scan through the connector: $plan")
       // the date/segment predicates reach the connector scan as pushed

@@ -10,10 +10,7 @@ class CommitLogGuardSpec extends AnyFunSuite {
   private val root = new java.io.File("src/main/scala")
   private val owner = new java.io.File(root, "graft/streaming/CommitLog.scala")
 
-  private def files(d: java.io.File): Seq[java.io.File] =
-    d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala")))
-  private def text(f: java.io.File): String =
-    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+  import ScalaSource.{files, text}
 
   private val formatMarks = Seq(
     "_snapshots\\.jsonl" -> "names the commit log file",

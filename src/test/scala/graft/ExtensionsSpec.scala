@@ -5,13 +5,6 @@ import org.apache.spark.sql.SparkSessionExtensions
 /** The custom expressions exposed at the SQL surface (E29 extension seam). */
 class ExtensionsSpec extends SparkSpec {
 
-  /** Registers the builders GraftExtensions injects on the shared session
-    * (built without the extension). */
-  private def registerGraftFunctions(): Unit =
-    GraftExtensions.functions.foreach { case (id, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(id.funcName, builder, "built-in")
-    }
-
   test("GraftExtensions applies cleanly to a fresh SparkSessionExtensions") {
     new GraftExtensions().apply(new SparkSessionExtensions) // must not throw
   }
@@ -59,7 +52,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("float_dot / simhash64 / minhash_sigs callable from spark.sql") {
-    registerGraftFunctions()
     val dot = spark.sql(
       "SELECT float_dot(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d")
       .head().getDouble(0)
@@ -77,7 +69,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("h60 / h60_array callable from spark.sql, match the documented formulation") {
-    registerGraftFunctions()
     val r = spark.sql(
       """SELECT h60('hello') AS a,
         |  CAST(conv(substring(md5(CAST('hello' AS BINARY)), 1, 15), 16, 10) AS BIGINT) AS b,
@@ -151,7 +142,6 @@ class ExtensionsSpec extends SparkSpec {
     for (n <- Seq[Expression](Literal(4), Literal(4L), Literal(4.toShort), Literal(4.toByte)))
       assert(builder("minhash_sigs")(Seq(arr, n)) == graft.functions.MinHashSigs(arr, 4))
     // and the rejection surfaces through spark.sql with the function's name
-    registerGraftFunctions()
     val e = intercept[Exception](spark.sql("SELECT minhash_sigs(array('a'), NULL)").collect())
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(t => t.isInstanceOf[IllegalArgumentException] && t.getMessage.contains("minhash_sigs")), e)

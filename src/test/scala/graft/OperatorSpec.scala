@@ -16,6 +16,32 @@ class OperatorSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("flagship entry returns rows on a session the engine did not configure") {
+    // A driver passes its own session. The generator writes events.ts as
+    // TIMESTAMP(NANOS) or as tz-less micros; such a session reads neither
+    // as the queries need without the engine confs. The testdata holds one
+    // form, so a NANOS copy of two events is read through it afterwards.
+    val s = spark.newSession()
+    s.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    s.conf.unset("spark.sql.parquet.inferTimestampNTZ.enabled")
+    assert(s.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "false")
+    assert(SparkEntry.entry(s).count() > 0)
+
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val nanos = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val dir = tmpDir("ts-nanos")
+    val w = ExampleParquetWriter.builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(nanos).withConf(spark.sparkContext.hadoopConfiguration).build()
+    val rows = new SimpleGroupFactory(nanos)
+    Seq(1L -> 1700000000123456789L, 2L -> 1700000001999999999L)
+      .foreach { case (id, ns) => w.write(rows.newGroup().append("event_id", id).append("ts", ns)) }
+    w.close()
+    val micros = Tables.t(s, dir, "events").orderBy("event_id").select(unix_micros(col("ts"))).collect().map(_.getLong(0))
+    assert(micros.toSeq == Seq(1700000000123456L, 1700000001999999L))
+  }
+
   test("every declared oracle key has a query") {
     val qs = SparkEntry.queries.keySet
     val orphans = SparkEntry.oracleSql.keySet.diff(qs)

@@ -8,15 +8,9 @@ class PinGuardSpec extends AnyFunSuite {
   test("localCheckpoint is called only inside Tables.pin") {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the project root: ${root.getAbsolutePath}")
-    def files(d: java.io.File): Seq[java.io.File] =
-      d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala")))
-    // code only: block comments, then line comments, are blanked first
-    def code(f: java.io.File): String = {
-      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      src.replaceAll("(?s)/\\*.*?\\*/", "").replaceAll("//[^\n]*", "")
-    }
-    val calls = files(root).flatMap { f =>
-      "\\.localCheckpoint\\b".r.findAllMatchIn(code(f)).map(_ => f.getPath).toSeq
+    // code only: comments blanked, strings emptied
+    val calls = ScalaSource.files(root).flatMap { f =>
+      "\\.localCheckpoint\\b".r.findAllMatchIn(ScalaSource.lex(ScalaSource.text(f))._1).map(_ => f.getPath).toSeq
     }
     assert(calls == Seq(new java.io.File(root, "graft/Tables.scala").getPath),
       s"localCheckpoint outside Tables.pin: ${calls.mkString(", ")}")

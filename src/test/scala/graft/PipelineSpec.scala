@@ -234,7 +234,6 @@ class PipelineSpec extends SparkSpec {
     import org.apache.spark.metrics.source.CodegenMetrics
     // the streaming query clones this session, as it clones an Engine one
     val s = spark.newSession()
-    s.conf.set(Engine.SharedCodeCache._1, Engine.SharedCodeCache._2)
     val work = tmpDir("graft-codegen")
     val topic = FileTopic(s"$work/topic")
     TradeGen.produce(s, topic, 200L, seed = 1L)

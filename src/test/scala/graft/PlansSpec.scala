@@ -2,17 +2,18 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.plans.logical.{Repartition, Sort}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 
-/** PresentationSortRule + Tables cache/spread behavior. The rule is exercised
-  * per-session via experimental.extraOptimizations (same batch the extension
-  * injection lands in) so the shared test session stays untouched. */
-class PlansSpec extends SparkSpec {
+/** PresentationSortRule + Tables cache/spread behavior. The shared engine
+  * session carries the rule (GraftExtensions); a session with the stats
+  * gate shut is the no-rule baseline. */
+class PlansSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
-  private def ruleSession() = {
+  private def gateShut() = {
     val s = spark.newSession()
-    s.experimental.extraOptimizations = Seq(graft.plans.PresentationSortRule(s))
+    s.conf.set("spark.graft.presentationSort.maxBytes", "1")
     s
   }
 
@@ -38,8 +39,7 @@ class PlansSpec extends SparkSpec {
   }
 
   test("small root sort becomes a single-partition local sort") {
-    val s = ruleSession()
-    val df = Tables.t(s, sfDir, "lineitem")
+    val df = Tables.t(spark, sfDir, "lineitem")
       .groupBy(col("l_returnflag")).agg(count(lit(1)).as("c"))
       .orderBy(col("l_returnflag"))
     val opt = df.queryExecution.optimizedPlan
@@ -51,30 +51,30 @@ class PlansSpec extends SparkSpec {
     // (the x55 regression the round-7 rule fix removed)
     assert(opt.collect { case r: Repartition if r.numPartitions == 1 => r }
       .forall(_.shuffle), "presentation sort must repartition WITH shuffle")
-    // physical plan: no range-partitioned exchange for the presentation sort
-    val rangeEx = df.queryExecution.executedPlan.collect {
+    // physical plan: no range-partitioned exchange for the presentation
+    // sort (collect walks into the adaptive plan)
+    val rangeEx = collect(df.queryExecution.executedPlan) {
       case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
     }
     assert(rangeEx.isEmpty)
   }
 
   test("rewritten sort returns identical rows in identical order") {
-    val s = ruleSession()
     def q(sess: org.apache.spark.sql.SparkSession) =
       Tables.t(sess, sfDir, "orders")
         .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
         .orderBy(desc("n"), col("o_orderpriority"))
-    assert(q(s).collect().toSeq == q(spark).collect().toSeq)
+    val rewritten = q(spark)
+    val baseline = q(gateShut())
+    assert(rewritten.queryExecution.optimizedPlan.collect { case so: Sort => so }.forall(!_.global))
+    assert(baseline.queryExecution.optimizedPlan.collect { case so: Sort => so }.exists(_.global))
+    assert(rewritten.collect().toSeq == baseline.collect().toSeq)
   }
 
   test("stats gate: oversized input keeps the distributed range sort") {
-    val s = ruleSession()
-    s.conf.set("spark.graft.presentationSort.maxBytes", "1") // force the gate shut
-    try {
-      val df = Tables.t(s, sfDir, "lineitem").orderBy(col("l_orderkey"))
-      val sorts = df.queryExecution.optimizedPlan.collect { case so: Sort => so }
-      assert(sorts.nonEmpty && sorts.forall(_.global))
-    } finally s.conf.unset("spark.graft.presentationSort.maxBytes")
+    val df = Tables.t(gateShut(), sfDir, "lineitem").orderBy(col("l_orderkey"))
+    val sorts = df.queryExecution.optimizedPlan.collect { case so: Sort => so }
+    assert(sorts.nonEmpty && sorts.forall(_.global))
   }
 
   test("table cache: meta mode reuses the resolved DataFrame") {

@@ -4,18 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session fixture: one SparkSession per suite (guide §ScalaTest). */
+/** Shared session fixture: one engine session per test JVM (guide
+  * §ScalaTest), so the specs run the plans, confs and I/O path the engine
+  * serves. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    // the engine's local FileSystem, so the specs exercise its I/O path
-    .config(Engine.LocalFs.toMap)
-    .getOrCreate()
+  lazy val spark: SparkSession = Engine.session("spark.app.name" -> getClass.getSimpleName)
 
   val sfDir = "/root/testdata/sf0.001"
 
