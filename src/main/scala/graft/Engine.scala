@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.GraftPins
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftExprBridge, SparkSession}
 
 /** The engine session, and the only place a `SparkSession` is built: every
   * main (Bench, Verify, the audits), the benchmark harness and the test
@@ -66,6 +66,19 @@ object Engine {
       // fixture.
       .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
+      // The session's Hadoop conf loads no mapred-default.xml
+      // (LeanHadoopConf). These are the keys of that file on Spark's file
+      // I/O path whose value differs from Hadoop's code default, pinned to
+      // the file's value; every other such key reads the same either way.
+      .config("spark.hadoop.mapreduce.input.fileinputformat.split.minsize", "0")
+      .config("spark.hadoop.mapreduce.output.fileoutputformat.compress.codec",
+        "org.apache.hadoop.io.compress.DefaultCodec")
+      .config("spark.hadoop.mapreduce.outputcommitter.factory.scheme.s3a",
+        "org.apache.hadoop.fs.s3a.commit.S3ACommitterFactory")
+      .config("spark.hadoop.mapreduce.outputcommitter.factory.scheme.abfs",
+        "org.apache.hadoop.fs.azurebfs.commit.AzureManifestCommitterFactory")
+      .config("spark.hadoop.mapreduce.outputcommitter.factory.scheme.gs",
+        "org.apache.hadoop.mapreduce.lib.output.committer.manifest.ManifestCommitterFactory")
       // Named SQL catalog over the engine's DSv2 connector: three-part
       // names (`SELECT … FROM graft.sf001.lineitem`) resolve through
       // sources.GraftCatalog to Spark's parquet scan over the resolved
@@ -86,9 +99,14 @@ object Engine {
     b
   }
 
+  /** The built session with [[LeanHadoopConf]] applied to the two Hadoop
+    * confs every other one is copied from: the SparkContext's, and the
+    * SharedState's, which copied the first when it was created. */
   def session(defaults: (String, String)*): SparkSession = {
     val s = builder(defaults: _*).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    LeanHadoopConf(s.sparkContext.hadoopConfiguration)
+    LeanHadoopConf(GraftExprBridge.sharedHadoopConf(s))
     s
   }
 

@@ -2,7 +2,9 @@ package graft
 
 /** Plan audit over every SparkEntry query: flags the anti-patterns the 100 TB
   * mandate forbids (unexpected cartesian products, nested-loop joins off the
-  * broadcast path, global sorts where none is required). One line per query.
+  * broadcast path, and a root global sort: a distributed range sort of the
+  * result that [[graft.plans.PresentationSortRule]] left in place because
+  * the input is estimated too big for one task). One line per query.
   * Usage: runMain graft.ExplainAudit [sfDir]
   */
 object ExplainAudit {
@@ -72,6 +74,22 @@ object ExplainAudit {
     }
   }
 
+  /** The plan's root, through AQE and codegen wrappers, is a global
+    * `SortExec`: a range exchange plus a sort per partition, to order the
+    * delivered result. */
+  private[graft] def rootGlobalSort(p: org.apache.spark.sql.execution.SparkPlan): Boolean = {
+    import org.apache.spark.sql.execution.{InputAdapter, SortExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    p match {
+      case a: AdaptiveSparkPlanExec => rootGlobalSort(a.executedPlan)
+      case q: QueryStageExec => rootGlobalSort(q.plan)
+      case w: WholeStageCodegenExec => rootGlobalSort(w.child)
+      case i: InputAdapter => rootGlobalSort(i.child)
+      case s: SortExec => s.global
+      case _ => false
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val spark = Engine.session()
@@ -87,7 +105,8 @@ object ExplainAudit {
           // nested-loop join anywhere we didn't explicitly choose an
           // all-pairs sweep and the build side isn't a provable single row
           "NestedLoop" -> (plan.contains("BroadcastNestedLoopJoin") &&
-            !intendedCross(name) && !allNljSingleRowBuild(physical))
+            !intendedCross(name) && !allNljSingleRowBuild(physical)),
+          "GlobalSort" -> rootGlobalSort(physical)
         ).filter(_._2).map(_._1)
         if (flags.nonEmpty) { flagged += 1; println(s"[audit] $name: ${flags.mkString(",")}") }
         else println(s"[audit] $name: ok")

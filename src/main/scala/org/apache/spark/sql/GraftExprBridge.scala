@@ -17,4 +17,8 @@ object GraftExprBridge {
     * column as nullable, whatever the writer declared. */
   def asNullable(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
     s.asNullable
+  /** The session-shared Hadoop conf (`SharedState` is private[sql]) that
+    * every per-query conf, write job and streaming-query clone copies. */
+  def sharedHadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sharedState.hadoopConf
 }

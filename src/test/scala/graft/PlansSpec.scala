@@ -38,6 +38,18 @@ class PlansSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(!ExplainAudit.allNljSingleRowBuild(plain.queryExecution.executedPlan))
   }
 
+  test("global-sort audit: flags the root range sort the rule leaves, not a rewritten one") {
+    val small = Tables.t(spark, sfDir, "lineitem")
+      .groupBy(col("l_returnflag")).agg(count(lit(1)).as("c"))
+      .orderBy(col("l_returnflag"))
+    assert(!ExplainAudit.rootGlobalSort(small.queryExecution.executedPlan),
+      small.queryExecution.executedPlan.toString)
+    // planned, never run: a billion rows are over the rule's size gate
+    val big = spark.range(1000000000L).orderBy(desc("id"))
+    assert(ExplainAudit.rootGlobalSort(big.queryExecution.executedPlan),
+      big.queryExecution.executedPlan.toString)
+  }
+
   test("small root sort becomes a single-partition local sort") {
     val df = Tables.t(spark, sfDir, "lineitem")
       .groupBy(col("l_returnflag")).agg(count(lit(1)).as("c"))
