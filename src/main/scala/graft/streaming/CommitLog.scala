@@ -17,9 +17,11 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
   * A commit line is `{"batch":B,"rows":R,"rejects":J,"committed":true}`,
   * followed by `"compacts":[…]` (the ids whose data a maintenance commit
   * replaces), `"deleteKey":"k"` (a MOR commit's delete-file key) or
-  * `"retiresDeletes":[…]` (the delete files a rewrite folds in). The log is
-  * append-only; position in it is the table's sequence number, so every
-  * fold here takes a lineage prefix, never an id range.
+  * `"retiresDeletes":[…]` (the delete files a rewrite folds in), and
+  * `"rowPreserving":true` on a compaction, whose replacement holds exactly
+  * the visible rows of the batches it replaces. The log is append-only;
+  * position in it is the table's sequence number, so every fold here takes
+  * a lineage prefix, never an id range.
   *
   * Writers append under [[withLock]]: ingest's commit ([[append]]) and
   * maintenance's compare-move-append ([[commitStaged]]) share it, so the
@@ -29,20 +31,35 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
   */
 object CommitLog {
   private val LogFile = "_snapshots.jsonl"
+  private val LockFile = "_snapshots.lock"
 
   /** One commit line. `replaces` is the `compacts` field (None: the line has
     * none — an ingest or MOR commit); `deleteKey` names the key column of
     * this commit's equality-delete file; `retires` lists the delete-file ids
-    * this commit folds in (they stop applying from here on). */
+    * this commit folds in (they stop applying from here on); `rowPreserving`
+    * marks a replacement whose rows are exactly the visible rows of what it
+    * replaces (a compaction; false on lines written before the field). */
   case class Commit(id: Long, rows: Long = 0L, rejects: Long = 0L,
       replaces: Option[Seq[Long]] = None, deleteKey: Option[String] = None,
-      retires: Seq[Long] = Nil) {
+      retires: Seq[Long] = Nil, rowPreserving: Boolean = false) {
     /** The ids whose data this commit replaces. */
     def compacts: Seq[Long] = replaces.getOrElse(Nil)
   }
 
   // ---- layout ----
   def isTable(dir: String): Boolean = Files.isRegularFile(Paths.get(dir, LogFile))
+
+  /** What tells this table's log from one re-created at the same path: the
+    * log file's key (its inode) and the lock file's modification time,
+    * fixed when the first commit created it (the lock is never written).
+    * None before the first commit. */
+  def identity(tableDir: String): Option[String] = {
+    def attrs(name: String) = scala.util.Try(Files.readAttributes(Paths.get(tableDir, name),
+      classOf[java.nio.file.attribute.BasicFileAttributes])).toOption
+    for (log <- attrs(LogFile); lock <- attrs(LockFile))
+      yield s"${log.fileKey}@${lock.lastModifiedTime.to(java.util.concurrent.TimeUnit.NANOSECONDS)}"
+  }
+
   def dataDir(tableDir: String): String = s"$tableDir/data"
   def batchDir(tableDir: String, id: Long): String = s"$tableDir/data/batch=$id"
   def deletesDir(tableDir: String, id: Long): String = s"$tableDir/_deletes/$id"
@@ -62,6 +79,7 @@ object CommitLog {
       c.replaces.fold("")(ids => s""","compacts":[${ids.mkString(",")}]""") +
       c.deleteKey.fold("")(k => s""","deleteKey":"$k"""") +
       (if (c.retires.isEmpty) "" else s""","retiresDeletes":[${c.retires.mkString(",")}]""") +
+      (if (c.rowPreserving) ""","rowPreserving":true""" else "") +
       "}"
 
   private val idRe = "\"batch\":(\\d+)".r
@@ -70,6 +88,7 @@ object CommitLog {
   private val compRe = "\"compacts\":\\[([0-9, ]*)\\]".r
   private val delKeyRe = "\"deleteKey\":\"([^\"]+)\"".r
   private val retireRe = "\"retiresDeletes\":\\[([0-9, ]*)\\]".r
+  private val preservingRe = "\"rowPreserving\":true".r
   private def idList(s: String): Seq[Long] =
     s.split(",").map(_.trim).filter(_.nonEmpty).map(_.toLong).toSeq
 
@@ -81,7 +100,8 @@ object CommitLog {
     Commit(m.group(1).toLong, count(rowsRe), count(rejectsRe),
       compRe.findFirstMatchIn(line).map(c => idList(c.group(1))),
       delKeyRe.findFirstMatchIn(line).map(_.group(1)),
-      retireRe.findFirstMatchIn(line).toSeq.flatMap(r => idList(r.group(1))))
+      retireRe.findFirstMatchIn(line).toSeq.flatMap(r => idList(r.group(1))),
+      preservingRe.findFirstIn(line).isDefined)
   }
 
   /** The commit log in APPEND ORDER (the table's lineage). */
@@ -112,6 +132,32 @@ object CommitLog {
     }
   }
 
+  /** The batches a fold over lineage prefix `base` lacks to cover the
+    * longer prefix `prefix`, in lineage order: each commit after `base`
+    * either adds its batch, or is a row-preserving compaction of batches the
+    * fold already holds, which only renames them. None when a fold over
+    * `base` cannot be extended to `prefix`:
+    *  - `prefix` does not start with `base` (an older read, or a rewritten log);
+    *  - a later commit carries a MOR delete or retires delete files;
+    *  - a later commit replaces batches and is not a row-preserving
+    *    compaction (a COW merge, or a line written before the field);
+    *  - a row-preserving compaction took in a batch the fold does not hold;
+    *  - a batch the fold holds is no longer visible in `prefix`. */
+  def appendedSince(base: Seq[Commit], prefix: Seq[Commit]): Option[Seq[Long]] =
+    if (!prefix.startsWith(base)) None
+    else {
+      val start: Option[(Set[Long], Vector[Long])] = Some((visibleIn(base).toSet, Vector.empty))
+      prefix.drop(base.size).foldLeft(start) {
+        case (Some((folded, added)), c) =>
+          if (c.deleteKey.isDefined || c.retires.nonEmpty) None
+          else if (c.replaces.isEmpty)
+            Some(if (folded(c.id) || added.contains(c.id)) (folded, added) else (folded, added :+ c.id))
+          else if (c.rowPreserving && c.compacts.forall(folded)) Some((folded -- c.compacts + c.id, added))
+          else None
+        case (None, _) => None
+      }.collect { case (folded, added) if visibleIn(prefix).toSet == folded ++ added => added }
+    }
+
   // ---- writers ----
   private val monitors = new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
@@ -127,7 +173,7 @@ object CommitLog {
     mon.synchronized {
       Files.createDirectories(Paths.get(tableDir))
       val ch = java.nio.channels.FileChannel.open(
-        Paths.get(tableDir, "_snapshots.lock"),
+        Paths.get(tableDir, LockFile),
         StandardOpenOption.CREATE, StandardOpenOption.WRITE)
       try {
         val lk = ch.lock()

@@ -249,11 +249,30 @@ object IngestJob {
     // small snapshots into one and records what it replaced); live
     // equality-delete files (merge-on-read MERGE) are applied on top — a
     // no-op unless an un-rewritten MOR merge exists.
+    val log = CommitLog.identity(tableDir)
     val cms = CommitLog.commits(tableDir)
-    Maintenance.applyDeletes(spark, tableDir,
-      readBatches(spark, tableDir, CommitLog.visibleIn(cms)), cms)
+    val visible = CommitLog.visibleIn(cms)
+    val listed = batchFiles(spark.sparkContext.hadoopConfiguration, tableDir, visible)
+    val df = Maintenance.applyDeletes(spark, tableDir, readListed(spark, tableDir, listed), cms)
       .drop("p_date").drop("batch")
+    reads.synchronized(reads.put(df,
+      Read(Paths.get(tableDir).toAbsolutePath.normalize.toString, log, cms, visible.zip(listed).toMap)))
+    df
   }
+
+  /** A [[readTable]] result: its table dir (absolute), the log it read
+    * ([[CommitLog.identity]]), the lineage prefix it resolved and the files
+    * it listed per visible batch. The DataFrame holds exactly the rows of
+    * those files, less the deletes live after `prefix`. */
+  final case class Read(tableDir: String, log: Option[String], prefix: Seq[CommitLog.Commit],
+      files: Map[Long, (Path, Array[FileStatus])])
+
+  /** Every live [[readTable]] result, held weakly (DataFrame identity: a
+    * derived DataFrame is not a table read). */
+  private val reads = new java.util.WeakHashMap[DataFrame, Read]()
+
+  /** The table read `df` is, if [[readTable]] returned it. */
+  def readOf(df: DataFrame): Option[Read] = reads.synchronized(Option(reads.get(df)))
 
   /** The named snapshots of a table as one DataFrame: the data columns,
     * then `batch` (long) and `p_date` (date), both read from the paths.
@@ -267,9 +286,13 @@ object IngestJob {
     *    (`value_schema_latest`) reads null for rows written before it
     *    existed.
     * No Spark job fires until the result is scanned. */
-  def readBatches(spark: SparkSession, tableDir: String, batches: Seq[Long]): DataFrame = {
+  def readBatches(spark: SparkSession, tableDir: String, batches: Seq[Long]): DataFrame =
+    readListed(spark, tableDir, batchFiles(spark.sparkContext.hadoopConfiguration, tableDir, batches))
+
+  /** [[readBatches]] over batch dirs already listed by [[batchFiles]]. */
+  private[streaming] def readListed(spark: SparkSession, tableDir: String,
+      listed: Seq[(Path, Array[FileStatus])]): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val listed = batchFiles(conf, tableDir, batches)
     val data = dataSchema(conf, tableDir, listed.flatMap(_._2.headOption))
     val schema = data.add("batch", LongType).add("p_date", DateType)
     if (listed.forall(_._2.isEmpty))

@@ -19,7 +19,8 @@ import org.apache.spark.util.SerializableConfiguration
   * parquet files and a scan pays one task + one footer-read per file).
   *
   * Log design: every maintenance commit appends a normal commit line; a
-  * `compacts` field lists the batch ids it replaces. Visibility = committed
+  * `compacts` field lists the batch ids it replaces, and a compaction's line
+  * is marked row-preserving (a merge's is not). Visibility = committed
   * − replaced, so readers atomically flip the moment the line lands (crash
   * before the append ⇒ the new data dir is simply invisible and the next run
   * overwrites it — same idempotent-write + commit-log protocol as ingest).
@@ -141,7 +142,11 @@ object Maintenance {
     *    equality-deletes are applied while reading (the compacted copy sits
     *    at a later sequence than the deletes, so they stop applying to it
     *    and keep applying to untouched batches); the rows are re-encoded
-    *    into ~`targetBytes` files, sized by the candidates' rows per byte.
+    *    into ~`targetBytes` files, sized by the candidates' rows per byte,
+    *    each date by as many write tasks of its own as it fills such files.
+    * Either way the commit is row-preserving: the new batch holds exactly
+    * the candidates' visible rows, so a fold over them stays valid
+    * ([[CommitLog.appendedSince]]).
     * At 100 TB scale either is the shape of an Iceberg rewrite action: the
     * small files are processed cluster-wide and committed once. */
   def compact(
@@ -162,17 +167,29 @@ object Maintenance {
     val n = copyPlan(conf, cms, listed, targetBytes) match {
       case Some(outputs) => copyChunks(spark, outputs, staged)
       case None =>
-        val bytes = listed.flatMap(_._2).map(_.getLen).sum
+        val files = listed.flatMap(_._2)
+        val bytes = files.map(_.getLen).sum
         val rows = cms.filter(c => ids.contains(c.id)).map(_.rows).sum
-        val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
         val perFile = if (rows == 0 || bytes == 0) 0L
           else math.max(1L, math.ceil(targetBytes.toDouble * rows / bytes).toLong)
+        // each date gets its own write tasks, as many as it fills
+        // ~targetBytes files (from its input bytes, by `p_date=` dir), and
+        // its rows are dealt round robin over them
+        val share = files.groupBy(_.getPath.getParent.getName.stripPrefix("p_date="))
+          .map { case (d, fs) => d -> math.max(1L, (fs.map(_.getLen).sum + targetBytes - 1) / targetBytes).toInt }
+          .toSeq.sorted
+        val first = share.map(_._1).zip(share.scanLeft(0)(_ + _._2)).toMap
+        val date = col("p_date").cast("string")
+        val task = coalesce(try_element_at(typedLit(first), date) +
+          pmod(monotonically_increasing_id(), try_element_at(typedLit(share.toMap), date)).cast("int"), lit(0))
         writeCounted(applyDeletes(spark, tableDir, IngestJob.readBatches(spark, tableDir, ids), cms)
-          .drop("batch").repartition(nFiles, col("p_date")), staged, perFile)
+          .drop("batch").repartitionById(share.map(_._2).sum, task),
+          staged, perFile)
     }
     val replaced = ids.sorted
+    // either way the new batch holds exactly the candidates' visible rows
     if (!CommitLog.commitStaged(tableDir, cms,
-        Commit(newId, n, replaces = Some(replaced)), staged))
+        Commit(newId, n, replaces = Some(replaced), rowPreserving = true), staged))
       throw new java.util.ConcurrentModificationException(
         s"compact: $tableDir log moved during compaction; re-run")
     Some(CompactionStats(newId, replaced, n))

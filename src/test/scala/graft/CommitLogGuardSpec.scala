@@ -37,5 +37,8 @@ class CommitLogGuardSpec extends AnyFunSuite {
     val source = text(new java.io.File(root, "graft/sources/CommitLogSource.scala"))
     assert(!source.contains("foldLeft") && source.contains("CommitLog.visibleIn"),
       "CommitLogSource folds visibility itself instead of calling CommitLog.visibleIn")
+    val pipeline = text(new java.io.File(root, "graft/streaming/AnalyticsPipeline.scala"))
+    assert(!pipeline.contains("compacts") && pipeline.contains("CommitLog.appendedSince"),
+      "AnalyticsPipeline folds the lineage itself instead of calling CommitLog.appendedSince")
   }
 }

@@ -11,7 +11,7 @@ class CommitLogSpec extends AnyFunSuite {
     "ingest" -> """{"batch":0,"rows":20000,"rejects":0,"committed":true}""",
     "ingest with rejects" -> """{"batch":2,"rows":19998,"rejects":2,"committed":true}""",
     "reject-only ingest" -> """{"batch":0,"rows":0,"rejects":3,"committed":true}""",
-    "compaction" -> """{"batch":1000000000000,"rows":59998,"rejects":0,"committed":true,"compacts":[0,1,2]}""",
+    "compaction" -> """{"batch":1000000000000,"rows":59998,"rejects":0,"committed":true,"compacts":[0,1,2],"rowPreserving":true}""",
     "COW merge" -> """{"batch":1000000000001,"rows":59998,"rejects":0,"committed":true,"compacts":[1000000000000]}""",
     "pure-insert COW merge" -> """{"batch":1000000000002,"rows":2,"rejects":0,"committed":true,"compacts":[]}""",
     "MOR merge" -> """{"batch":1000000000003,"rows":2,"rejects":0,"committed":true,"deleteKey":"trade_id"}""",
@@ -28,7 +28,7 @@ class CommitLogSpec extends AnyFunSuite {
 
   test("codec: fields parse to what the folds read") {
     val Seq(_, _, _, comp, _, pure, mor, _, rw, _) = written.map(l => CommitLog.parse(l._2).get)
-    assert(comp == Commit(1000000000000L, 59998L, 0L, replaces = Some(Seq(0L, 1L, 2L))))
+    assert(comp == Commit(1000000000000L, 59998L, 0L, replaces = Some(Seq(0L, 1L, 2L)), rowPreserving = true))
     assert(pure.replaces == Some(Nil) && pure.compacts.isEmpty)
     assert(mor.deleteKey == Some("trade_id") && mor.replaces.isEmpty)
     assert(rw.retires == Seq(1000000000003L, 1000000000004L))
@@ -40,6 +40,45 @@ class CommitLogSpec extends AnyFunSuite {
     assert(CommitLog.parse("""{"batch":1000000000000,"compacts":[0, 1]}""").get.compacts == Seq(0L, 1L))
     assert(CommitLog.parse("""{"batch":1000000000001,"deleteKey":"user_id"}""").get.deleteKey == Some("user_id"))
     assert(CommitLog.parse("").isEmpty)
+  }
+
+  test("row-preserving: round trip, legacy compaction lines, and which writers mark it") {
+    val marked = Commit(7L, 10L, replaces = Some(Seq(1L, 2L)), rowPreserving = true)
+    assert(CommitLog.parse(CommitLog.render(marked)) == Some(marked))
+    assert(!CommitLog.parse("""{"batch":1000000000000,"rows":200,"rejects":0,"committed":true,"compacts":[0,1,2]}""")
+      .get.rowPreserving, "a line written before the field is not row-preserving")
+    assert(!CommitLog.render(Commit(8L, replaces = Some(Seq(1L)))).contains("rowPreserving"))
+    val byShape = written.toMap.view.mapValues(l => CommitLog.parse(l).get.rowPreserving).toMap
+    assert(byShape("compaction"))
+    assert(Seq("COW merge", "pure-insert COW merge", "rewriteDeletes", "data-less retire").forall(!byShape(_)))
+  }
+
+  test("appendedSince: the batches a fold lacks, or None when it cannot be extended") {
+    val base = Seq(Commit(0L), Commit(1L))
+    def since(more: Commit*) = CommitLog.appendedSince(base, base ++ more)
+    assert(since() == Some(Nil))
+    assert(since(Commit(2L), Commit(3L)) == Some(Seq(2L, 3L)))
+    // a compaction of folded batches only renames them
+    assert(since(Commit(10L, replaces = Some(Seq(0L, 1L)), rowPreserving = true), Commit(2L)) == Some(Seq(2L)))
+    assert(since(Commit(2L), Commit(10L, replaces = Some(Seq(0L, 1L)), rowPreserving = true)) == Some(Seq(2L)))
+    // a compaction that took in an unfolded batch
+    assert(since(Commit(2L), Commit(10L, replaces = Some(Seq(1L, 2L)), rowPreserving = true)).isEmpty)
+    // a replacement that is not row-preserving: a COW merge, or a legacy line
+    assert(since(Commit(10L, replaces = Some(Seq(1L)))).isEmpty)
+    assert(since(Commit(10L, rows = 2L, replaces = Some(Nil))).isEmpty)
+    // a MOR delete, a retire
+    assert(since(Commit(11L, deleteKey = Some("k"))).isEmpty)
+    assert(since(Commit(12L, replaces = Some(Nil), retires = Seq(11L))).isEmpty)
+    // a prefix that does not extend the base: an older read, a rewritten log
+    assert(CommitLog.appendedSince(base, base.take(1)).isEmpty)
+    assert(CommitLog.appendedSince(base, Seq(Commit(0L), Commit(5L), Commit(1L))).isEmpty)
+    // a replayed commit line adds nothing; a compaction's replaced ids must be folded
+    assert(since(Commit(1L), Commit(2L)) == Some(Seq(2L)))
+    val compacted = base :+ Commit(10L, replaces = Some(Seq(0L, 1L)), rowPreserving = true)
+    assert(CommitLog.appendedSince(compacted, compacted :+ Commit(2L)) == Some(Seq(2L)))
+    assert(CommitLog.appendedSince(compacted,
+      compacted :+ Commit(11L, replaces = Some(Seq(0L)), rowPreserving = true)).isEmpty,
+      "a folded batch that vanished")
   }
 
   test("lineage folds: visibility and live deletes follow log position") {

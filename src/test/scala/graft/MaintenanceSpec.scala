@@ -538,6 +538,40 @@ class MaintenanceSpec extends SparkSpec {
     assert(after.filter(col("price") === 9999.0).count() == 2L)
   }
 
+  test("the rewrite writes one date with as many tasks as it fills targetBytes files") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import org.apache.spark.sql.functions.{col, lit}
+    val work = tmpDir("graft-compact-tasks")
+    ingestOnce(work, 400, seed = 62); ingestOnce(work, 400, seed = 63)
+    val table = s"$work/table"
+    val updates = IngestJob.readTable(spark, table).orderBy("trade_id").limit(2)
+      .withColumn("price", lit(9999.0))
+    Maintenance.mergeIntoMor(spark, table, updates, "trade_id", "ts_event")
+    assert(!copies(table))
+    val cms = CommitLog.commits(table)
+    val before = IngestJob.readTable(spark, table).collect().map(_.toSeq).toSet
+    val asOf = cms.map(c => c.id -> IngestJob.readTableAsOf(spark, table, c.id).collect().map(_.toSeq).toSet)
+    val bytes = batchFiles(table, CommitLog.visibleIn(cms)).map(_.getLen).sum
+    val target = bytes / 4
+    // tasks that wrote rows: the write stage's, the only one that writes
+    val writers = new AtomicInteger
+    val stats = listening(new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null && e.taskMetrics.outputMetrics.recordsWritten > 0) writers.incrementAndGet()
+    })(Maintenance.compact(spark, table, targetBytes = target).get)
+    val out = batchFiles(table, Seq(stats.newBatch))
+    assert(out.map(_.getPath.getParent.getName).distinct.size == 1, "one date")
+    // the date's share of ~target files, each its own write task
+    assert(writers.get == (bytes + target - 1) / target, s"one date written by ${writers.get} task(s)")
+    assert(out.size >= 2 && out.forall(_.getLen < target * 2), out.map(_.getLen).mkString(","))
+    assert(IngestJob.readTable(spark, table).collect().map(_.toSeq).toSet == before)
+    assert(IngestJob.readTable(spark, table).filter(col("price") === 9999.0).count() == 2L)
+    asOf.foreach { case (id, rows) =>
+      assert(IngestJob.readTableAsOf(spark, table, id).collect().map(_.toSeq).toSet == rows, s"as of $id")
+    }
+  }
+
   test("a copy staged but not committed stays invisible, and staging GC reclaims it") {
     import java.nio.file.{Files, Paths}
     val work = tmpDir("graft-copy-crash")

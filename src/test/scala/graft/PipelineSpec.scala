@@ -39,6 +39,20 @@ class PipelineSpec extends SparkSpec {
     assert(batches.nonEmpty)
   }
 
+  test("two cycles in one work dir: the second, incremental analytics equal a fresh full computation") {
+    val work = tmpDir("graft-pipeline-twice")
+    AnalyticsPipeline.runCycle(spark, work, 1000L, seed = 1L)
+    val result = AnalyticsPipeline.runCycle(spark, work, 1500L, seed = 2L)
+    val trades = IngestJob.readTable(spark, s"$work/tables/trades")
+    assert(trades.count() == 2500L)
+    val full = AnalyticsPipeline.query(trades)
+    val cols = full.columns.map(col).toIndexedSeq
+    val latest = result.select(cols: _*).collect()
+      .groupBy(_.getString(0)).values.map(_.maxBy(_.getLong(1)).toSeq).toSet
+    assert(latest == full.collect().map(_.toSeq).toSet)
+    assert(latest.toSeq.map(_(1).asInstanceOf[Long]).sum == 2500L)
+  }
+
   test("ingest is idempotent: a replayed batch id is skipped") {
     val work = tmpDir("graft-idem")
     val topic = FileTopic(s"$work/topic")

@@ -31,17 +31,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     import java.util.concurrent.atomic.AtomicInteger
     import org.apache.spark.scheduler._
     val (jobs, stages, tasks) = (new AtomicInteger, new AtomicInteger, new AtomicInteger)
-    val listener = new SparkListener {
+    val a = listening(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = stages.incrementAndGet()
       override def onTaskStart(e: SparkListenerTaskStart): Unit = tasks.incrementAndGet()
-    }
+    })(body)
+    (a, jobs.get, stages.get, tasks.get)
+  }
+
+  /** `body`'s result, with `listener` attached while it runs: every event
+    * of `body`'s jobs, and none from before it, reaches the listener. */
+  def listening[A](listener: org.apache.spark.scheduler.SparkListener)(body: => A): A = {
     org.apache.spark.ListenerBusDrain(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       val a = body
       org.apache.spark.ListenerBusDrain(spark.sparkContext)
-      (a, jobs.get, stages.get, tasks.get)
+      a
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
